@@ -118,8 +118,7 @@ def main() -> None:
     # 3. salted SHUFFLE route — the beyond-broadcast 100 TB plan —
     # forced over the same polygon side (auto-derived salt)
     def pip_shuffle() -> int:
-        cells = polygon_cells_at_res(polys, res=7).localCheckpoint(eager=True)
-        return pip_join_shuffle(points, cells, res=7).count()
+        return pip_join_shuffle(points, polygon_cells_at_res(polys, res=7), res=7).count()
 
     bench("pip_join_shuffle", pip_shuffle)
 

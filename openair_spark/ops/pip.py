@@ -264,13 +264,11 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
             F.sum(F.size("ring") - 1).alias("e")).collect()[0]["e"] or 0
         if n_edges > max_broadcast_edges:
             LAST_ROUTE = "shuffle"
-            cells = polygon_cells_at_res(polys_persisted, res=7)
-            # polygon_cells feeds two actions (auto_salt + the join);
-            # GC-scoped materialization, then release the input persist
-            cells = cells.localCheckpoint(eager=True)
+            # pip_join_shuffle materializes the cells at once, after
+            # which the input persist is no longer read
+            hits = pip_join_shuffle(points, polygon_cells_at_res(polys_persisted, res=7),
+                                    lat_col=lat_col, lon_col=lon_col, res=7)
             polys_persisted.unpersist()
-            hits = pip_join_shuffle(points, cells, lat_col=lat_col,
-                                    lon_col=lon_col, res=7)
             return hits.drop("cell")
         # one combined scan yields the ring edges AND the cover index
         # (was two jobs: collect_ring_set + polygon_cell_index)
@@ -457,7 +455,12 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
 
     salt=None (default) derives the count from the cell histogram
     (auto_salt); pass an int to pin it.
+
+    polygon_cells is materialized once up front (GC-scoped local
+    checkpoint): auto_salt and the plan's three scans of it would
+    otherwise each re-run its cover kernel.
     """
+    polygon_cells = polygon_cells.localCheckpoint(eager=True)
     if salt is None:
         salt = auto_salt(polygon_cells)
     has_full = "is_full" in polygon_cells.columns

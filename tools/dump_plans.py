@@ -63,8 +63,7 @@ def main() -> None:
     dump("tile_cover", polygon_tiles(feats))
     dump("h3_cover", h3_polygon_tiles(feats, 5, 9))
     dump("pip_join", pip_join(points, polys))
-    cells = polygon_cells_at_res(polys, res=7).localCheckpoint(eager=True)
-    dump("pip_join_shuffle", pip_join_shuffle(points, cells, res=7))
+    dump("pip_join_shuffle", pip_join_shuffle(points, polygon_cells_at_res(polys, res=7), res=7))
     for q in ["dedup_minhash_lsh", "ann_bucket_join"]:
         dump(q, cat[q].spark_fn(spark, sf_dir))
     if "dedup_canonical_url" in cat:
