@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -90,7 +91,7 @@ def main() -> None:
             leg.append(round(time.time() - t0, 3))
         samples[name] = leg
         n_out[name] = n
-        t_out[name] = sorted(leg)[len(leg) // 2]
+        t_out[name] = statistics.median(leg)
 
     def bench(name: str, fn) -> None:
         _run_leg(name, fn, timings, counts)

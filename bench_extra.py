@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -102,7 +103,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         samples[name] = leg
         rows[name] = n
-        legs[name] = sorted(leg)[len(leg) // 2]
+        legs[name] = statistics.median(leg)
 
     # 1. broadcast route, counted (headline shape, for comparison)
     bench("pip_join_broadcast", lambda: pip_join(points, polys).count())

@@ -1,26 +1,28 @@
 """Cell-local k-nearest-neighbors over airspace centroids (north rule).
 
-Centroids (small side, ~10^4-10^6) are exploded into their cell plus a
-neighbor ring at a chosen resolution — executor-side, in one vectorized
-Arrow pass (no driver collect; at 10^6 centroids x ring-1 that is ~9M
-index rows built where the data lives) — then broadcast; points join on
-their single cell (JVM-side key), distances are computed with built-in
-column arithmetic (haversine in Spark SQL functions — no Python), and
-row_number() over (point, distance) keeps the top k.
+Centroids (small side, ~10^4-10^6) are collected once on the driver as
+Arrow, sorted by their quadkey cell at a chosen resolution and shipped
+to the workers as one broadcast variable. Points stay where they are:
+one narrow `mapInArrow` kernel looks up each point's (2*rings+1)^2 cell
+window in the sorted cell column (`searchsorted`), gathers the
+candidates, computes haversine distances in numpy and keeps the top k.
+No shuffle, no join, no window function.
 
 EXACTNESS is guaranteed for any distribution, not assumed from density:
 a point's ring-local top-k is provably complete iff its k-th candidate
 distance is smaller than the geodesic margin between the point and the
-edge of its (2*rings+1)^2 cell window. Points that fail the margin test
-(or have < k candidates — e.g. empty neighborhoods, polar cells) fall
-back to an exact brute-force pass against the broadcast centroid set.
-With a sane `res` the fallback set is empty; with a hostile one the
+edge of its cell window. Points that fail the margin test (or have < k
+candidates — e.g. empty neighborhoods, polar cells, null coordinates)
+are ranked by brute force against every centroid inside the same
+kernel. With a sane `res` that set is small; with a hostile one the
 answer is still exact, just slower.
 
 `res=None` picks a resolution from the centroid bounding box and count
-so a ring window holds ~4k..64 expected centroids (computed with a
-single-row aggregate, not a centroid collect).
+so a ring window holds ~4k..64 expected centroids.
 
+The kernel emits the centroid coordinates, and `dist_km` is computed
+after it by the Spark `haversine_km` expression, so output distances are
+the JVM's to the last bit (numpy's libm can differ there).
 Determinism: ties broken by (distance, centroid_id).
 """
 
@@ -28,12 +30,17 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
-from ..index.quadkey import _RES_SHIFT, _Y_SHIFT, sql_cell_expr
+from ..index import quadkey
 
 _KM_PER_DEG = 111.19492664455873  # pi * 6371.0088 / 180, turf-consistent R
+_TAKEN = np.iinfo(np.int64).max
 
 
 def haversine_km(lat1, lon1, lat2, lon2):
@@ -45,6 +52,16 @@ def haversine_km(lat1, lon1, lat2, lon2):
     dlon = F.radians(lon2 - lon1)
     a = F.pow(F.sin(dlat / 2), 2) + F.pow(F.sin(dlon / 2), 2) * F.cos(rlat1) * F.cos(rlat2)
     return F.atan2(F.sqrt(a), F.sqrt(1 - a)) * 2 * 6371.0088
+
+
+def _haversine_np(lat1, lon1, lat2, lon2):
+    """numpy twin of `haversine_km`, used only to rank candidates. It
+    keeps the Spark expression's operation order (not core.geo's), so it
+    meets the JVM's result to the last bit far more often."""
+    rlat1, rlat2 = np.radians(lat1), np.radians(lat2)
+    a = (np.sin(np.radians(lat2 - lat1) / 2) ** 2
+         + np.sin(np.radians(lon2 - lon1) / 2) ** 2 * np.cos(rlat1) * np.cos(rlat2))
+    return np.arctan2(np.sqrt(a), np.sqrt(1 - a)) * 2 * 6371.0088
 
 
 def pick_res(n: int, bbox_h: float, bbox_w: float, k: int) -> int:
@@ -65,54 +82,35 @@ def pick_res(n: int, bbox_h: float, bbox_w: float, k: int) -> int:
     return max(2, min(res, 12))
 
 
-def centroid_cell_index(centroids: DataFrame, res: int, rings: int,
-                        centroid_id: str = "centroid_id",
-                        lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
-    """Exploded (cell, centroid) ring index, built executor-side.
+def _cell_xy(lat, lon, res: int):
+    """Quadkey (ix, iy) of `index.quadkey.cell_id`, plus a mask of rows
+    with both coordinates present."""
+    ok = ~(np.isnan(lat) | np.isnan(lon))
+    _, ix, iy = quadkey.decode(quadkey.cell_id(np.nan_to_num(lat), np.nan_to_num(lon), res))
+    return ix, iy, ok
 
-    One vectorized Arrow pass: each batch computes every centroid's base
-    (ix, iy) with numpy, then emits the (2*rings+1)^2 Chebyshev window
-    (lat-clamped, lon-wrapped) as one frame per offset — mirroring
-    ops/pip.polygon_cell_index rather than a driver loop."""
-    import numpy as np
-    import pandas as pd
 
-    src = centroids.select(
-        F.col(centroid_id).cast("string").alias(centroid_id),
-        F.col(lat_col).cast("double").alias("c_lat"),
-        F.col(lon_col).cast("double").alias("c_lon"),
-    )
-    n = 1 << res
-    offsets = [(dx, dy)
-               for dy in range(-rings, rings + 1)
-               for dx in range(-rings, rings + 1)]
-    res_base = np.int64(res) << np.int64(_RES_SHIFT)
-
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            lat = pdf["c_lat"].to_numpy()
-            lon = pdf["c_lon"].to_numpy()
-            ix = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-            iy = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-            frames = []
-            for dx, dy in offsets:
-                cy = iy + dy
-                ok = (cy >= 0) & (cy < n)
-                if not ok.any():
-                    continue
-                cx = (ix[ok] + dx) % n
-                cells = res_base + (cy[ok] << np.int64(_Y_SHIFT)) + cx
-                sub = pdf.loc[ok, [centroid_id, "c_lat", "c_lon"]].copy()
-                sub.insert(0, "cell", cells)
-                frames.append(sub)
-            if frames:
-                # lon wrap at tiny n can land two offsets on one cell
-                yield pd.concat(frames).drop_duplicates()
-
-    schema = f"cell long, {centroid_id} string, c_lat double, c_lon double"
-    return src.mapInPandas(kernel, schema)
+def _top_k(p_lat, p_lon, pidx, c_lat, c_lon, c_rank, cidx, k: int):
+    """Each point's first k candidate pairs (pidx, cidx) by (distance,
+    centroid_id), as (pidx, cidx, rank, distance). `pidx` must be sorted.
+    One pass of segmented minima per rank instead of a sort: ~10x
+    cheaper than a lexsort at ~40 candidates per point."""
+    n = len(pidx)
+    d = _haversine_np(p_lat[pidx], p_lon[pidx], c_lat[cidx], c_lon[cidx])
+    d = np.where(np.isnan(d), np.inf, d)  # a missing coordinate ranks last
+    tie = c_rank[cidx] * n + np.arange(n)  # centroid_id rank, then position
+    starts = np.flatnonzero(np.diff(pidx, prepend=-1))
+    sizes = np.diff(starts, append=n)
+    out = [(np.zeros(0, np.int64),) * 4]
+    for rank in range(1, k + 1):
+        low = np.repeat(np.minimum.reduceat(d, starts), sizes)
+        pick = np.minimum.reduceat(np.where(d == low, tie, _TAKEN), starts)
+        pick = pick[pick != _TAKEN] % n
+        if not len(pick):
+            break
+        out.append((pidx[pick], cidx[pick], np.full(len(pick), rank), d[pick]))
+        d[pick], tie[pick] = np.inf, _TAKEN
+    return [np.concatenate(c) for c in zip(*out)]
 
 
 def knn_join(points: DataFrame, centroids: DataFrame, k: int = 3,
@@ -120,91 +118,93 @@ def knn_join(points: DataFrame, centroids: DataFrame, k: int = 3,
              point_id: str = "point_id", centroid_id: str = "centroid_id",
              lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
     """points(point_id, lat, lon) x centroids(centroid_id, lat, lon)
-    -> (point columns, centroid_id, dist_km, rank<=k). Exact.
-    """
-    stats = centroids.agg(
-        F.count("*").alias("n"),
-        (F.max(lat_col) - F.min(lat_col)).alias("bbox_h"),
-        (F.max(lon_col) - F.min(lon_col)).alias("bbox_w"),
-    ).collect()[0]
-    n_cent = int(stats["n"])
+    -> (point columns, centroid_id, dist_km, rank<=k). Exact."""
+    cent = centroids.select(
+        F.col(centroid_id).cast("string").alias(centroid_id),
+        F.col(lat_col).cast("double").alias("c_lat"),
+        F.col(lon_col).cast("double").alias("c_lon"),
+    ).toArrow()
+    c_lat, c_lon = (cent.column(c).to_numpy() for c in ("c_lat", "c_lon"))
     if res is None:
-        res = pick_res(n_cent, float(stats["bbox_h"] or 0.0),
-                       float(stats["bbox_w"] or 0.0), k)
-    index_df = centroid_cell_index(
-        centroids, res, rings, centroid_id=centroid_id,
-        lat_col=lat_col, lon_col=lon_col)
-    cent_b = centroids.selectExpr(
-        f"CAST({centroid_id} AS STRING) AS {centroid_id}",
-        f"{lat_col} AS c_lat", f"{lon_col} AS c_lon")
+        res = pick_res(len(c_lat), *(float(np.ptp(v)) if v.size else 0.0 for v in
+                                     (c_lat[~np.isnan(c_lat)], c_lon[~np.isnan(c_lon)])), k)
+    n = 1 << res
+    ix, iy, ok = _cell_xy(c_lat, c_lon, res)
+    c_key = np.where(ok, iy * n + ix, -1)
+    c_rank = pc.rank(cent.column(centroid_id), sort_keys="ascending",
+                     null_placement="at_start", tiebreaker="dense").to_numpy().astype(np.int64)
+    order = np.argsort(c_key, kind="stable")
+    # centroids travel ONCE, sorted by cell, as a broadcast variable
+    # (unpickled once per python worker), as pip_join ships its RingSet
+    cent_b = points.sparkSession.sparkContext.broadcast((
+        cent.take(pa.array(order)), c_key[order], c_lat[order], c_lon[order],
+        c_rank[order]))
 
-    point_cols = points.columns
-    pts = points.withColumn("cell", F.expr(sql_cell_expr(lat_col, lon_col, res)))
-
-    cand = pts.join(F.broadcast(index_df), "cell", "inner")
-    cand = cand.withColumn(
-        "dist_km", haversine_km(F.col(lat_col), F.col(lon_col), F.col("c_lat"), F.col("c_lon"))
-    )
-    w = Window.partitionBy(point_id).orderBy(F.col("dist_km").asc(), F.col(centroid_id).asc())
-    ranked = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("cell", "c_lat", "c_lon")
-    )
-    # ranked feeds BOTH the safety aggregate and the safe-hit anti-join;
-    # without materialization the candidate join + window execute twice
-    # (the round-2 bench regression). An eager localCheckpoint instead
-    # of persist(): single traversal and MEMORY_AND_DISK storage, with
-    # blocks released by the ContextCleaner when the returned frame is
-    # dropped — repeated knn_join calls in one session no longer
-    # accumulate session-lifetime cached partitions (ADVICE r3).
-    # Bounded: <= k rows per point.
-    # Fault-tolerance tradeoff (ADVICE r4): localCheckpoint TRUNCATES
-    # lineage, so on a multi-executor cluster a lost executor makes
-    # these blocks unrecoverable (persist would recompute them from
-    # lineage), and it is unsafe under dynamic allocation (decommission
-    # drops blocks). On clusters that need either guarantee, set
-    # spark.checkpoint.dir and use reliable .checkpoint() here; the
-    # GC-scoped local variant is the right default for the single-JVM
-    # bench/driver environment this repo targets.
-    ranked = ranked.localCheckpoint(eager=True)
-
+    offsets = [(dx, dy) for dy in range(-rings, rings + 1) for dx in range(-rings, rings + 1)]
     # ---- exactness margin: geodesic distance from the point to the
     # nearest edge of its ring window, conservatively min of the lat
     # margin and the lon margin at the worst latitude inside the window.
     # The window extends (rings+1)*cell_h above the point's latitude
     # (rings whole cells beyond its own cell's far edge), so the
     # worst-case latitude pad must track rings — not a fixed 2 cells.
-    cell_h = 180.0 / (1 << res)
+    cell_h = 180.0 / n
     window_h = rings * cell_h  # degrees of guaranteed lat slack
-    worst_lat = F.least(
-        F.abs(F.col(lat_col)) + F.lit((rings + 1.0) * cell_h), F.lit(89.999))
-    lon_margin_km = (
-        F.lit(2.0 * window_h * _KM_PER_DEG) * F.cos(F.radians(worst_lat)))
-    margin_km = F.least(F.lit(window_h * _KM_PER_DEG), lon_margin_km)
+    out_names = points.columns + [centroid_id, "c_lat", "c_lon", "rank"]
 
-    per_point = ranked.groupBy(point_id).agg(
-        F.count("*").alias("_n"), F.max("dist_km").alias("_kth"))
-    safety = per_point.withColumn(
-        "_safe", (F.col("_n") >= F.least(F.lit(k), F.lit(n_cent))))
-    pts_meta = points.select(point_id, lat_col).join(safety, point_id, "left")
-    unsafe_ids = pts_meta.where(
-        F.col("_safe").isNull() | ~F.col("_safe")
-        | (F.col("_kth") >= margin_km)
-    ).select(point_id)
+    def kernel(batches):
+        cent, key, lat, lon, crank = cent_b.value
+        if not len(key):
+            return
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            p_lat, p_lon = (batch.column(c).cast(pa.float64()).to_numpy(zero_copy_only=False)
+                            for c in (lat_col, lon_col))
+            px, py, p_ok = _cell_xy(p_lat, p_lon, res)
+            wins = np.full((len(px), len(offsets)), -1, dtype=np.int64)
+            for j, (dx, dy) in enumerate(offsets):
+                cy = py + dy
+                valid = p_ok & (cy >= 0) & (cy < n)
+                wins[valid, j] = cy[valid] * n + (px[valid] + dx) % n
+            # lon wrap at tiny n can land two offsets on one cell
+            wins.sort(axis=1)
+            wins[:, 1:][wins[:, 1:] == wins[:, :-1]] = -1
+            # each window cell holds the run key[lo:lo + cnt] of centroids
+            wins = wins.ravel()
+            lo = np.searchsorted(key, wins, "left")
+            cnt = np.where(wins >= 0, np.searchsorted(key, wins, "right") - lo, 0)
+            pidx = np.repeat(np.arange(len(px)).repeat(len(offsets)), cnt)
+            cidx = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt - lo, cnt)
+            pk, ck, rk, dk = _top_k(p_lat, p_lon, pidx, lat, lon, crank, cidx, k)
+            m = np.bincount(pk, minlength=len(px))
+            kth = np.full(len(px), np.inf)
+            last = rk == m[pk]
+            kth[pk[last]] = dk[last]
+            worst_lat = np.minimum(np.abs(p_lat) + (rings + 1.0) * cell_h, 89.999)
+            margin = np.minimum(window_h * _KM_PER_DEG,
+                                2.0 * window_h * _KM_PER_DEG * np.cos(np.radians(worst_lat)))
+            safe = (m >= min(k, len(key))) & (kth < margin)
+            keep = safe[pk]
+            parts = [(pk[keep], ck[keep], rk[keep])]
+            # unsafe points: exact brute force against every centroid,
+            # ~1M pairs per chunk
+            unsafe = np.flatnonzero(~safe)
+            step = max(1, (1 << 20) // len(key))
+            for s in range(0, len(unsafe), step):
+                u = unsafe[s:s + step]
+                parts.append(_top_k(p_lat, p_lon, np.repeat(u, len(key)), lat, lon, crank,
+                                    np.tile(np.arange(len(key)), len(u)), k)[:3])
+            pidx, cidx, rank = (np.concatenate(c) for c in zip(*parts))
+            yield from pa.Table.from_arrays(
+                batch.take(pa.array(pidx)).columns + cent.take(pa.array(cidx)).columns
+                + [pa.array(rank, pa.int32())], names=out_names).to_batches()
 
-    safe_hits = ranked.join(F.broadcast(unsafe_ids), point_id, "left_anti")
-
-    unsafe_pts = points.join(F.broadcast(unsafe_ids), point_id, "left_semi")
-    brute = unsafe_pts.crossJoin(F.broadcast(cent_b)).withColumn(
+    schema = StructType(points.schema.fields + [
+        StructField(centroid_id, StringType()), StructField("c_lat", DoubleType()),
+        StructField("c_lon", DoubleType()), StructField("rank", IntegerType())])
+    ranked = points.mapInArrow(kernel, schema).withColumn(
         "dist_km", haversine_km(F.col(lat_col), F.col(lon_col), F.col("c_lat"), F.col("c_lon")))
-    brute_hits = (
-        brute.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("c_lat", "c_lon")
-    )
-    out_cols = point_cols + [centroid_id, "dist_km", "rank"]
-    return safe_hits.select(out_cols).unionByName(brute_hits.select(out_cols))
+    return ranked.select(points.columns + [centroid_id, "dist_km", "rank"])
 
 
 def knn_bruteforce(points: DataFrame, centroids: DataFrame, k: int = 3,

@@ -98,8 +98,15 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     # materialize once for the three consumers (sizes + both self-join
     # sides) — GC-scoped localCheckpoint instead of cache(): a persist
     # here was never unpersisted, leaking a cached DF into the session
-    # per invocation (same class of leak fixed in ops/knn.py, which
-    # also documents the localCheckpoint fault-tolerance tradeoff).
+    # per invocation.
+    # Fault-tolerance tradeoff: localCheckpoint TRUNCATES lineage, so on
+    # a multi-executor cluster a lost executor makes these blocks
+    # unrecoverable (persist would recompute them from lineage), and it
+    # is unsafe under dynamic allocation (decommission drops blocks). On
+    # clusters that need either guarantee, set spark.checkpoint.dir and
+    # use reliable .checkpoint() here; the GC-scoped local variant is the
+    # right default for the single-JVM bench/driver environment this
+    # repo targets.
     shingles = (
         raw.join(df_per_shingle.where(F.col("df") <= _MAX_SHINGLE_DF), "shingle")
         .select("doc_id", "shingle")

@@ -40,6 +40,7 @@ def get_spark(app_name: str = "openair-spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.daemon.module", "openair_spark.spark.daemon")
         .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
         .getOrCreate()

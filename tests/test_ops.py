@@ -158,6 +158,78 @@ def test_knn_rings2_high_latitude_exact(spark):
     assert a == b
 
 
+def _knn_rows(df):
+    return sorted((r["point_id"], r["rank"], r["centroid_id"], r["dist_km"])
+                  for r in df.collect())
+
+
+def _assert_knn_exact(spark, pts, cents, k=3, **kw):
+    points = spark.createDataFrame(pts, "point_id string, lat double, lon double")
+    centroids = spark.createDataFrame(cents, "centroid_id string, lat double, lon double")
+    got = knn_join(points, centroids, k=k, **kw)
+    assert got.columns == ["point_id", "lat", "lon", "centroid_id", "dist_km", "rank"]
+    rows = _knn_rows(got)
+    assert rows == _knn_rows(knn_bruteforce(points, centroids, k=k))
+    return rows
+
+
+def test_knn_exact_distance_tie_breaks_on_centroid_id(spark):
+    """Two centroids at one coordinate tie on distance; rank follows
+    centroid_id, in the window pass and in the fallback alike."""
+    cents = [("c-b", 50.0, 10.0), ("c-a", 50.0, 10.0), ("c-z", 50.5, 10.5),
+             ("c-y", 48.0, 12.0)]
+    pts = [("p0", 50.1, 10.1), ("p1", 49.0, 11.0)]
+    for res in (None, 12):
+        rows = _assert_knn_exact(spark, pts, cents, k=3, res=res)
+        p0 = [r for r in rows if r[0] == "p0"]
+        assert [r[2] for r in p0[:2]] == ["c-a", "c-b"]
+        assert p0[0][3] == p0[1][3]
+
+
+def test_knn_antimeridian_window(spark):
+    """The ring window wraps in longitude: a point at lon 179.9 finds the
+    centroid at -179.9 as its nearest neighbour."""
+    cents = [("east", 10.0, -179.9), ("west", 10.0, 179.0), ("far", 10.0, 170.0),
+             ("far2", 12.0, -175.0)]
+    pts = [("p0", 10.0, 179.9), ("p1", 10.2, -179.95)]
+    rows = _assert_knn_exact(spark, pts, cents, k=2, res=6)
+    assert [r[2] for r in rows if r[0] == "p0"] == ["east", "west"]
+
+
+def test_knn_k_larger_than_centroid_count(spark):
+    cents = [("c0", 45.0, 5.0), ("c1", 46.0, 6.0), ("c2", 47.0, 7.0)]
+    pts = [(f"p{i}", 44.0 + i, 4.0 + i) for i in range(5)]
+    rows = _assert_knn_exact(spark, pts, cents, k=5)
+    assert len(rows) == 5 * len(cents)
+
+
+def test_knn_empty_centroid_set(spark):
+    pts = [("p0", 50.0, 10.0), ("p1", None, 11.0)]
+    assert _assert_knn_exact(spark, pts, [], k=3) == []
+
+
+def test_knn_null_point_latitude(spark):
+    """A point without a latitude still gets k rows: every distance is
+    null, so the first k centroids in centroid_id order."""
+    cents = [("c2", 45.0, 5.0), ("c0", 46.0, 6.0), ("c1", 47.0, 7.0), ("c3", 48.0, 8.0)]
+    pts = [("p0", None, 5.0), ("p1", 46.5, 6.5)]
+    rows = _assert_knn_exact(spark, pts, cents, k=3)
+    assert [(r[1], r[2], r[3]) for r in rows if r[0] == "p0"] == [
+        (1, "c0", None), (2, "c1", None), (3, "c2", None)]
+
+
+def test_knn_fine_res_sends_every_point_to_fallback(spark):
+    """At res 12 a ring window is ~0.13 km tall, far below any k-th
+    distance, so every point takes the brute-force fallback."""
+    rng = np.random.default_rng(31)
+    cents = [(f"c{i}", float(rng.uniform(40, 50)), float(rng.uniform(0, 10)))
+             for i in range(50)]
+    pts = [(f"p{i}", float(rng.uniform(40, 50)), float(rng.uniform(0, 10)))
+           for i in range(200)]
+    rows = _assert_knn_exact(spark, pts, cents, k=4, res=12)
+    assert len(rows) == 200 * 4
+
+
 def test_raster_assignment_and_zonal(points, spark):
     pts = points.withColumn("value", F.col("lat") + F.col("lon"))
     tiles = tiles_from_points(pts, res=8, value_col="value").cache()

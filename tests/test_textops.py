@@ -130,7 +130,7 @@ def test_connected_components_random_graphs_vs_union_find(spark):
 
 
 def test_materialized_intermediates_release_after_gc(spark):
-    """The GC-scoped localCheckpoint pattern (knn, jaccard, minhash)
+    """The GC-scoped localCheckpoint pattern (jaccard, minhash)
     must not accumulate storage across invocations: once the returned
     frame is dropped, the ContextCleaner frees the blocks within a few
     GC cycles (measured: the weak-ref path needs several JVM GCs, not
