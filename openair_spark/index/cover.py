@@ -239,18 +239,23 @@ def _classify_cells_multi(cells: np.ndarray, owner: np.ndarray,
     return verdict
 
 
-def cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
-                max_cells: int = 4096) -> list:
+_NO_CELLS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
+             np.empty(0, dtype=bool))
+
+
+def cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
+                 max_cells: int = 4096) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Compact quadkey covers of MANY rings with level-batched
     classification: one _classify_cells_multi call per refinement level
     for the whole batch instead of one classify_cells call per
-    (ring, level). Per-ring results are the same (cell, is_full) SETS
-    compact_cover produces, including the per-ring max_cells degrade
-    semantics (asserted ring-by-ring over the full bench corpus and by
-    tests/test_properties.py)."""
+    (ring, level). Returns flat (owner, cell, is_full) arrays sorted by
+    owner (the ring's position in `rings`). Per-ring results are the
+    same (cell, is_full) SETS compact_cover produces, including the
+    per-ring max_cells degrade semantics (asserted ring-by-ring over the
+    full bench corpus and by tests/test_properties.py)."""
     nr = len(rings)
     if nr == 0:
-        return []
+        return _NO_CELLS
     rings = [np.asarray(r, dtype=np.float64) for r in rings]
     # CSR edge arrays shared by the crossing tests and the corner ray
     # casts (RingSet: x1/y1 are the segment start points = ring
@@ -334,22 +339,17 @@ def cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
         frontier, fowner = kids, kowner
 
     if not out_cells:
-        return [[] for _ in range(nr)]
-    cells = np.concatenate(out_cells)
+        return _NO_CELLS
     owner = np.concatenate(out_owner)
-    fulls = np.concatenate(out_full)
     order = np.argsort(owner, kind="stable")
-    cells, fulls = cells[order], fulls[order]
-    counts = np.bincount(owner, minlength=nr)
-    offs = np.concatenate([[0], np.cumsum(counts)])
+    return owner[order], np.concatenate(out_cells)[order], np.concatenate(out_full)[order]
+
+
+def cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
+                max_cells: int = 4096) -> list:
+    """cover_arrays as one [(cell_id, is_full)] list per ring."""
+    owner, cells, fulls = cover_arrays(rings, min_res, max_res, max_cells)
+    offs = np.searchsorted(owner, np.arange(len(rings) + 1))
     return [list(zip(cells[offs[i]:offs[i + 1]].tolist(),
                      fulls[offs[i]:offs[i + 1]].tolist()))
-            for i in range(nr)]
-
-
-def cover_cells_at_res(ring, res: int, max_cells: int = 4096) -> list[int]:
-    """Flat (non-compact) cover: all res-`res` cells touching the ring."""
-    return sorted(
-        {int(c) if full else int(c)
-         for c, full in compact_cover(ring, min_res=res, max_res=res, max_cells=max_cells)}
-    )
+            for i in range(len(rings))]

@@ -35,6 +35,19 @@ def points_in_ring(px, py, ring) -> np.ndarray:
     return (hits.sum(axis=1) % 2).astype(bool)
 
 
+def ring_edges(rings: list) -> tuple[np.ndarray, ...]:
+    """(lens, x1, y1, x2, y2) of closed (M, 2) rings: ring i's M-1 edges,
+    ring after ring."""
+    lens = np.asarray([len(r) - 1 for r in rings], dtype=np.int64)
+    if not rings:
+        return (lens,) + tuple(np.empty(0) for _ in range(4))
+    v = np.concatenate(rings)
+    last = np.cumsum(lens + 1) - 1
+    first = last - lens
+    return (lens, np.delete(v[:, 0], last), np.delete(v[:, 1], last),
+            np.delete(v[:, 0], first), np.delete(v[:, 1], first))
+
+
 class RingSet:
     """CSR-packed edge arrays for a set of rings, for bulk PIP over
     (point, ring) candidate pairs in ONE numpy pass.
@@ -46,21 +59,24 @@ class RingSet:
     """
 
     def __init__(self, rings: dict):
-        self.ids = list(rings.keys())
+        self._csr(list(rings), *ring_edges(
+            [np.asarray(r, dtype=np.float64) for r in rings.values()]))
+
+    @classmethod
+    def from_edges(cls, ids, lens, x1, y1, x2, y2) -> "RingSet":
+        """RingSet from flat edge arrays sorted ring after ring, in edge
+        order: ring ids[i] owns the next lens[i] edges."""
+        rs = cls.__new__(cls)
+        rs._csr(ids, lens, x1, y1, x2, y2)
+        return rs
+
+    def _csr(self, ids, lens, x1, y1, x2, y2) -> None:
+        self.ids = list(ids)
         self.idx_of = {pid: i for i, pid in enumerate(self.ids)}
-        x1l, y1l, x2l, y2l, lens = [], [], [], [], []
-        for pid in self.ids:
-            r = np.asarray(rings[pid], dtype=np.float64)
-            x1l.append(r[:-1, 0]); y1l.append(r[:-1, 1])
-            x2l.append(r[1:, 0]); y2l.append(r[1:, 1])
-            lens.append(len(r) - 1)
-        self.x1 = np.concatenate(x1l) if x1l else np.empty(0)
-        self.y1 = np.concatenate(y1l) if y1l else np.empty(0)
-        self.x2 = np.concatenate(x2l) if x2l else np.empty(0)
-        self.y2 = np.concatenate(y2l) if y2l else np.empty(0)
         self.lens = np.asarray(lens, dtype=np.int64)
-        self.starts = np.concatenate([[0], np.cumsum(self.lens)[:-1]]) \
-            if lens else np.empty(0, dtype=np.int64)
+        self.starts = np.cumsum(self.lens) - self.lens
+        self.x1, self.y1, self.x2, self.y2 = (
+            np.asarray(a, dtype=np.float64) for a in (x1, y1, x2, y2))
 
     def contains(self, px, py, ring_idx) -> np.ndarray:
         """Even-odd PIP for each (px[i], py[i]) against ring ring_idx[i].

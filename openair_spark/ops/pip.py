@@ -2,12 +2,19 @@
 
 Plan shape (for 10^12 points x ~10^5 polygons):
 
-  polygons --driver--> compact covers --> cell index rows
-      (cell, polygon_id, is_full, ring)          [small: broadcast]
+  polygons --one setup--> cover index rows + ring edges
+      cover_index: (polygon_idx, cell, is_full, bbox)   [small: broadcast]
+      RingSet: CSR ring edges                           [broadcast variable]
+      (a DataFrame's setup runs on executors in one pass; a driver-side
+      list runs the same setup in the driver)
   points  --map--> cell = quadkey(point, res per cover row's res range)
   join    points x broadcast(cell_index) on cell  [NO shuffle]
   exact   is_full rows skip PIP; partial rows run the vectorized
-          ray-cast in one Arrow-batched kernel
+          ray-cast in one Arrow-batched kernel, keyed by the int
+          polygon_idx; a broadcast dim join restores polygon_id
+
+ops/raster.py::assign_tiles uses the same setup and int key at one
+resolution.
 
 Skew: a broadcast join has no shuffle skew, but a hot *cell* (dense
 megacity airspace) still concentrates exact-PIP work in whichever tasks
@@ -30,8 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index import quadkey
-from ..index.cover import compact_cover, cover_batch
-from ..index.pip import RingSet, points_in_ring
+from ..index.cover import cover_arrays
+from ..index.pip import RingSet, points_in_ring, ring_edges
 
 # Cover band for the PIP probe index. min 7 (not the tile mandate's 5):
 # every cover resolution the index USES adds one exploded probe row PER
@@ -47,58 +54,29 @@ MIN_RES = 7
 MAX_RES = 9
 
 
-def build_cell_index(polygons: list[dict], min_res: int = MIN_RES,
-                     max_res: int = MAX_RES) -> pd.DataFrame:
-    """polygons: [{'polygon_id': str, 'ring': [[lon,lat],...]}] ->
-    rows (cell, polygon_id, is_full, ring_json). Runs driver-side for
-    broadcast-scale polygon sets; ring_json carried only on PARTIAL rows
-    (FULL rows need no exact test) to keep the broadcast small."""
-    rows = []
-    for poly in polygons:
-        arr = np.asarray(poly["ring"], dtype=np.float64)
-        w, s = float(arr[:, 0].min()), float(arr[:, 1].min())
-        e, n = float(arr[:, 0].max()), float(arr[:, 1].max())
-        for cell, is_full in compact_cover(arr, min_res=min_res, max_res=max_res):
-            rows.append({
-                "cell": int(cell),
-                "polygon_id": poly["polygon_id"],
-                "is_full": bool(is_full),
-                "west": w, "south": s, "east": e, "north": n,
-            })
-    return pd.DataFrame(rows, columns=[
-        "cell", "polygon_id", "is_full", "west", "south", "east", "north"])
+def _usable_rings(rings) -> tuple[np.ndarray, list[np.ndarray]]:
+    """Positions and (M, 2) float arrays of the rings a cover is built
+    for. A null ring, or one with fewer than 4 points (a closed
+    triangle), gets no cover rows, so its polygon gets no hits."""
+    pos, arrs = [], []
+    for i, ring in enumerate(rings):
+        if ring is None or len(ring) < 4:
+            continue
+        pos.append(i)
+        arrs.append(np.asarray(list(ring), dtype=np.float64))
+    return np.asarray(pos, dtype=np.int64), arrs
 
 
-def collect_ring_set(polygons: DataFrame) -> RingSet:
-    """Driver-side RingSet from a polygons DataFrame via FLAT edge
-    columns: nested ring arrays through toPandas materialize millions
-    of python list objects on the driver (seconds of serial time at
-    10^4+ polygons); exploding to one row per edge keeps the transfer
-    pure-numeric Arrow -> numpy."""
-    edges = polygons.select(
-        "polygon_id",
-        F.posexplode(F.expr(
-            "transform(slice(ring, 1, size(ring) - 1), "
-            "(p, i) -> struct(p[0] AS x1, p[1] AS y1, "
-            "ring[i + 1][0] AS x2, ring[i + 1][1] AS y2))")).alias("edge_idx", "e"),
-    ).select("polygon_id", "edge_idx", "e.x1", "e.y1", "e.x2", "e.y2")
-    pdf = edges.toPandas()
-    if len(pdf) == 0:
-        return RingSet({})
-    pdf = pdf.sort_values(["polygon_id", "edge_idx"], kind="stable")
-    rs = RingSet({})
-    pid_arr = pdf["polygon_id"].to_numpy()
-    bounds = np.flatnonzero(np.concatenate([[True], pid_arr[1:] != pid_arr[:-1]]))
-    counts = np.diff(np.concatenate([bounds, [len(pid_arr)]]))
-    rs.ids = [pid_arr[b] for b in bounds]
-    rs.idx_of = {pid: i for i, pid in enumerate(rs.ids)}
-    rs.x1 = pdf["x1"].to_numpy(dtype=np.float64)
-    rs.y1 = pdf["y1"].to_numpy(dtype=np.float64)
-    rs.x2 = pdf["x2"].to_numpy(dtype=np.float64)
-    rs.y2 = pdf["y2"].to_numpy(dtype=np.float64)
-    rs.lens = counts.astype(np.int64)
-    rs.starts = bounds.astype(np.int64)
-    return rs
+def cover_index(rings: list[np.ndarray], min_res: int, max_res: int) -> dict:
+    """The polygon cover index: flat arrays (owner, cell, is_full, west,
+    south, east, north), one entry per compact-cover cell of rings[owner]
+    in [min_res, max_res], with its ring's bbox. The bbox lets a join
+    prefilter candidates JVM-side before the exact-PIP kernel."""
+    owner, cell, is_full = cover_arrays(rings, min_res=min_res, max_res=max_res)
+    bbox = np.asarray([(r[:, 0].min(), r[:, 1].min(), r[:, 0].max(), r[:, 1].max())
+                       for r in rings], dtype=np.float64).reshape(-1, 4)[owner]
+    return {"owner": owner, "cell": cell, "is_full": is_full, "west": bbox[:, 0],
+            "south": bbox[:, 1], "east": bbox[:, 2], "north": bbox[:, 3]}
 
 
 def _point_cells_expr(lat_col: str, lon_col: str, cover_resolutions: list[int]):
@@ -110,80 +88,55 @@ def _point_cells_expr(lat_col: str, lon_col: str, cover_resolutions: list[int]):
     ])
 
 
-CELL_INDEX_SCHEMA = ("cell long, polygon_id string, is_full boolean, "
-                     "west double, south double, east double, north double")
-
 _SETUP_SCHEMA = ("polygon_id string, kind int, a long, b int, "
                  "x1 double, y1 double, x2 double, y2 double")
 
 
+def _setup_rows(polygons: pd.DataFrame, min_res: int, max_res: int) -> pd.DataFrame:
+    """polygons(polygon_id, ring) -> both broadcast-route inputs as one
+    frame: cover index rows (kind=0: a=cell, b=is_full, x1..y2=bbox) and
+    ring edge rows (kind=1: a=edge_idx, x1,y1,x2,y2=edge)."""
+    pos, arrs = _usable_rings(polygons["ring"])
+    ix = cover_index(arrs, min_res, max_res)
+    lens, ex1, ey1, ex2, ey2 = ring_edges(arrs)
+    eowner = np.repeat(np.arange(len(arrs)), lens)
+    edge_idx = np.arange(len(eowner)) - np.repeat(np.cumsum(lens) - lens, lens)
+    ids = polygons["polygon_id"].to_numpy()[pos]
+    n_cov, n_edge = len(ix["cell"]), len(eowner)
+    return pd.DataFrame({
+        "polygon_id": np.concatenate([ids[ix["owner"]], ids[eowner]]),
+        "kind": np.repeat(np.array([0, 1], dtype=np.int32), [n_cov, n_edge]),
+        "a": np.concatenate([ix["cell"], edge_idx]),
+        "b": np.concatenate([ix["is_full"], np.zeros(n_edge, dtype=bool)]).astype(np.int32),
+        "x1": np.concatenate([ix["west"], ex1]),
+        "y1": np.concatenate([ix["south"], ey1]),
+        "x2": np.concatenate([ix["east"], ex2]),
+        "y2": np.concatenate([ix["north"], ey2]),
+    })
+
+
 def _polygon_setup(polygons: DataFrame, min_res: int, max_res: int) -> DataFrame:
-    """One executor pass emitting BOTH broadcast-route inputs: cover
-    index rows (kind=0: a=cell, b=is_full, x1..y2=bbox) and ring edge
-    rows (kind=1: a=edge_idx, x1,y1,x2,y2=edge). The previous shape ran
-    collect_ring_set (JVM explode) and polygon_cell_index (Arrow cover
-    kernel) as two separate jobs over the persisted polygon side; one
-    combined scan halves the setup job count the bench pays per call."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split()[0] for c in _SETUP_SCHEMA.split(", ")]
-        for pdf in batches:
-            frames = []
-            arrs = [np.asarray([list(p) for p in ring], dtype=np.float64)
-                    for ring in pdf["ring"]]
-            covers = cover_batch(arrs, min_res=min_res, max_res=max_res)
-            for pid, arr, cover in zip(pdf["polygon_id"], arrs, covers):
-                w, s = float(arr[:, 0].min()), float(arr[:, 1].min())
-                e, n = float(arr[:, 0].max()), float(arr[:, 1].max())
-                ne = len(arr) - 1
-                frames.append(pd.DataFrame({
-                    "polygon_id": pid,
-                    "kind": np.concatenate([np.zeros(len(cover), dtype=np.int32),
-                                            np.ones(ne, dtype=np.int32)]),
-                    "a": np.concatenate([
-                        np.asarray([c for c, _ in cover], dtype=np.int64),
-                        np.arange(ne, dtype=np.int64)]),
-                    "b": np.concatenate([
-                        np.asarray([1 if f else 0 for _, f in cover],
-                                   dtype=np.int32),
-                        np.zeros(ne, dtype=np.int32)]),
-                    "x1": np.concatenate([np.full(len(cover), w), arr[:-1, 0]]),
-                    "y1": np.concatenate([np.full(len(cover), s), arr[:-1, 1]]),
-                    "x2": np.concatenate([np.full(len(cover), e), arr[1:, 0]]),
-                    "y2": np.concatenate([np.full(len(cover), n), arr[1:, 1]]),
-                }))
-            yield (pd.concat(frames, ignore_index=True)[cols] if frames
-                   else pd.DataFrame(columns=cols))
-
+    """_setup_rows as one executor pass over a polygon DataFrame: the
+    ring set never crosses the driver as nested lists, and one scan
+    yields both the edges and the cover index."""
     return polygons.select("polygon_id", "ring").mapInPandas(
-        kernel, _SETUP_SCHEMA)
+        lambda batches: (_setup_rows(pdf, min_res, max_res) for pdf in batches),
+        _SETUP_SCHEMA)
 
 
-def _split_setup(pdf: "pd.DataFrame") -> tuple[RingSet, "pd.DataFrame"]:
-    """Driver-side split of the _polygon_setup output into the RingSet
-    (CSR edge arrays, same layout as collect_ring_set) and the cover
-    index frame (same columns as polygon_cell_index + polygon_idx)."""
-    edges = pdf[pdf["kind"] == 1]
-    rs = RingSet({})
-    if len(edges):
-        edges = edges.sort_values(["polygon_id", "a"], kind="stable")
-        pid_arr = edges["polygon_id"].to_numpy()
-        bounds = np.flatnonzero(
-            np.concatenate([[True], pid_arr[1:] != pid_arr[:-1]]))
-        counts = np.diff(np.concatenate([bounds, [len(pid_arr)]]))
-        rs.ids = [pid_arr[b] for b in bounds]
-        rs.idx_of = {pid: i for i, pid in enumerate(rs.ids)}
-        rs.x1 = edges["x1"].to_numpy(dtype=np.float64)
-        rs.y1 = edges["y1"].to_numpy(dtype=np.float64)
-        rs.x2 = edges["x2"].to_numpy(dtype=np.float64)
-        rs.y2 = edges["y2"].to_numpy(dtype=np.float64)
-        rs.lens = counts.astype(np.int64)
-        rs.starts = bounds.astype(np.int64)
+def _split_setup(pdf: pd.DataFrame) -> tuple[RingSet, pd.DataFrame]:
+    """Driver-side split of the setup rows into the RingSet (one ring
+    per polygon_id, edges in order) and the cover index frame keyed by
+    the RingSet's int polygon_idx."""
+    edges = pdf[pdf["kind"] == 1].sort_values(["polygon_id", "a"], kind="stable")
+    pid = edges["polygon_id"].to_numpy()
+    starts = np.flatnonzero(np.r_[len(pid) > 0, pid[1:] != pid[:-1]])
+    rs = RingSet.from_edges(pid[starts], np.diff(np.r_[starts, len(pid)]),
+                            *(edges[c].to_numpy() for c in ("x1", "y1", "x2", "y2")))
     cov = pdf[pdf["kind"] == 0]
     index_pdf = pd.DataFrame({
         "cell": cov["a"].to_numpy(dtype=np.int64),
-        "polygon_idx": cov["polygon_id"].map(rs.idx_of).to_numpy(
-            dtype=np.int32) if len(cov) else np.empty(0, dtype=np.int32),
+        "polygon_idx": cov["polygon_id"].map(rs.idx_of).to_numpy(dtype=np.int32),
         "is_full": cov["b"].to_numpy(dtype=bool),
         "west": cov["x1"].to_numpy(), "south": cov["y1"].to_numpy(),
         "east": cov["x2"].to_numpy(), "north": cov["y2"].to_numpy(),
@@ -191,33 +144,32 @@ def _split_setup(pdf: "pd.DataFrame") -> tuple[RingSet, "pd.DataFrame"]:
     return rs, index_pdf
 
 
-def polygon_cell_index(polygons: DataFrame, min_res: int = MIN_RES,
-                       max_res: int = MAX_RES) -> DataFrame:
-    """Executor-parallel cover computation: polygons(polygon_id, ring)
-    -> (cell, polygon_id, is_full, bbox). A narrow mapInPandas — at
-    10^5+ polygons the driver never materializes the ring set; Spark
-    broadcasts the computed index directly. The bbox lets the join
-    prefilter candidates JVM-side before the exact-PIP kernel."""
+def list_setup(polygons: list[dict], min_res: int, max_res: int
+               ) -> tuple[RingSet, pd.DataFrame]:
+    """The broadcast setup of a driver-side [{'polygon_id', 'ring'}] list."""
+    return _split_setup(_setup_rows(
+        pd.DataFrame(polygons, columns=["polygon_id", "ring"]), min_res, max_res))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split()[0] for c in CELL_INDEX_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            arrs = [np.asarray([list(p) for p in ring], dtype=np.float64)
-                    for ring in pdf["ring"]]
-            covers = cover_batch(arrs, min_res=min_res, max_res=max_res)
-            for pid, arr, cover in zip(pdf["polygon_id"], arrs, covers):
-                w, s = float(arr[:, 0].min()), float(arr[:, 1].min())
-                e, n = float(arr[:, 0].max()), float(arr[:, 1].max())
-                for cell, is_full in cover:
-                    rows.append({
-                        "cell": int(cell), "polygon_id": pid,
-                        "is_full": bool(is_full),
-                        "west": w, "south": s, "east": e, "north": n,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
 
-    return polygons.select("polygon_id", "ring").mapInPandas(kernel, CELL_INDEX_SCHEMA)
+def broadcast_sides(spark: SparkSession, ring_set: RingSet, index_pdf: pd.DataFrame):
+    """(rings broadcast, index DataFrame, polygon_idx -> polygon_id dim).
+
+    The hot path carries an int polygon_idx, never the id string: Arrow
+    string columns dominate kernel-stage CPU (JVM serialize + python
+    object materialization) and anti-scale under local-mode core
+    contention; the id is restored by a broadcast dim join on the
+    (small) hit set afterwards. Rings travel ONCE as a broadcast
+    variable (unpickled once per python worker, reused across tasks).
+    The index is broadcast-scale by contract, so holding it driver-side
+    costs no more than the broadcast build itself — and a LocalRelation
+    never re-executes upstream and leaves nothing cached to leak."""
+    rings_b = spark.sparkContext.broadcast(ring_set)
+    index_df = spark.createDataFrame(
+        index_pdf, "cell long, polygon_idx int, is_full boolean, "
+                   "west double, south double, east double, north double")
+    dim = spark.createDataFrame(list(enumerate(ring_set.ids)),
+                                "polygon_idx int, polygon_id string")
+    return rings_b, index_df, dim
 
 
 # routing decision of the most recent pip_join call ("broadcast" |
@@ -229,7 +181,7 @@ LAST_ROUTE: str | None = None
 # rows; 4M edges ~ 128 MB broadcast — roughly Spark's own 8G-executor
 # comfort zone for autoBroadcastJoinThreshold-style decisions. Beyond
 # it, pip_join auto-routes to the salted shuffle variant instead of
-# OOMing the driver on collect_ring_set (the round-4 100x-scale seam).
+# OOMing the driver on the ring-set collect (the round-4 100x-scale seam).
 DEFAULT_MAX_BROADCAST_EDGES = 4_000_000
 
 
@@ -251,13 +203,10 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
     Both produce identical (point, polygon_id) hit sets."""
     global LAST_ROUTE
     spark = points.sparkSession
-    resolutions = list(range(min_res, max_res + 1))
 
     # Materialize the polygon side ONCE. The upstream plan may be an
     # expensive Arrow parse (pages -> features); without a persist, the
-    # sizing aggregate, ring-set collect, and cover collect would each
-    # re-execute it.
-    polys_persisted = None
+    # sizing aggregate and the setup collect would each re-execute it.
     if isinstance(polygons, DataFrame):
         polys_persisted = polygons.select("polygon_id", "ring").persist()
         n_edges = polys_persisted.agg(
@@ -270,51 +219,21 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
                                     lat_col=lat_col, lon_col=lon_col, res=7)
             polys_persisted.unpersist()
             return hits.drop("cell")
-        # one combined scan yields the ring edges AND the cover index
-        # (was two jobs: collect_ring_set + polygon_cell_index)
         ring_set, index_pdf = _split_setup(
             _polygon_setup(polys_persisted, min_res, max_res).toPandas())
         polys_persisted.unpersist()
     else:
-        ring_set = RingSet({p["polygon_id"]: np.asarray(p["ring"], dtype=np.float64)
-                            for p in polygons})
-        index_pdf = build_cell_index(polygons, min_res, max_res).assign(
-            polygon_idx=lambda d: d["polygon_id"].map(ring_set.idx_of).astype(
-                "int32"))
+        ring_set, index_pdf = list_setup(polygons, min_res, max_res)
     LAST_ROUTE = "broadcast"
-
-    # rings travel ONCE as a broadcast variable (unpickled once per
-    # python worker, reused across tasks) — candidate rows carry only
-    # polygon_id, not the ring JSON, so the Arrow transfer stays
-    # ~constant bytes/row and tasks pay no per-task ring-parse cost
-    rings_b = spark.sparkContext.broadcast(ring_set)
-
-    # the hot path carries an int polygon_idx, never the id string:
-    # Arrow string columns dominate kernel-stage CPU (JVM serialize +
-    # python object materialization) and anti-scale under local-mode
-    # core contention; the id is restored by a broadcast dim join on
-    # the (small) hit set afterwards.
-    # The index is broadcast-scale by contract, so holding it driver-side
-    # costs no more than the broadcast build itself — and a LocalRelation
-    # never re-executes upstream and leaves nothing cached to leak.
-    dim = spark.createDataFrame(
-        [(i, pid) for i, pid in enumerate(ring_set.ids)],
-        "polygon_idx int, polygon_id string")
-    index_pdf = index_pdf[
-        ["cell", "polygon_idx", "is_full", "west", "south", "east", "north"]]
-    index_small = spark.createDataFrame(
-        index_pdf,
-        "cell long, polygon_idx int, is_full boolean, "
-        "west double, south double, east double, north double")
+    rings_b, index_small, dim = broadcast_sides(spark, ring_set, index_pdf)
 
     # probe only resolutions the cover actually uses: small polygons
     # put every cover leaf at max_res, so blindly exploding each point
     # to all res levels multiplies the probe row count for nothing
-    used_res = sorted(
+    resolutions = sorted(
         int(r) for r in
         np.unique(index_pdf["cell"].to_numpy(dtype=np.int64) >> quadkey._RES_SHIFT)
-    )
-    resolutions = used_res or resolutions
+    ) or list(range(min_res, max_res + 1))
 
     pts = points.withColumn(
         "_cells", _point_cells_expr(lat_col, lon_col, resolutions)
@@ -372,33 +291,24 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
 
 def polygon_cells_at_res(polygons: DataFrame, res: int = 7) -> DataFrame:
     """Executor-parallel shuffle-join input: polygons(polygon_id, ring)
-    -> (cell, polygon_id, is_full, west..north bbox, ring_json) with one
-    row per covering cell at the fixed resolution (compact_cover pinned
-    to min=max=res yields every intersecting cell). The ring travels as
-    JSON so the shuffle variant can evaluate the exact test without any
-    driver-side or broadcast ring materialization; is_full and the bbox
-    let pip_join_shuffle skip the exact test for interior cells and
-    prefilter candidates JVM-side (round 6 — the shuffle route
-    previously ray-cast every cell-sharing candidate)."""
+    -> (cell, polygon_id, is_full, west..north bbox, ring_json): the
+    cover_index pinned to min=max=res, so every intersecting res-`res`
+    cell gets one row. The ring travels as JSON so the shuffle variant
+    can evaluate the exact test without any driver-side or broadcast
+    ring materialization; is_full and the bbox let pip_join_shuffle
+    skip the exact test for interior cells and prefilter candidates
+    JVM-side."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["cell", "polygon_id", "is_full",
-                "west", "south", "east", "north", "ring_json"]
         for pdf in batches:
-            rows = []
-            arrs = [np.asarray([list(p) for p in ring], dtype=np.float64)
-                    for ring in pdf["ring"]]
-            covers = cover_batch(arrs, min_res=res, max_res=res)
-            for pid, arr, cover in zip(pdf["polygon_id"], arrs, covers):
-                rj = json.dumps(arr.tolist())
-                w, s = float(arr[:, 0].min()), float(arr[:, 1].min())
-                e, n = float(arr[:, 0].max()), float(arr[:, 1].max())
-                for cell, is_full in cover:
-                    rows.append({"cell": int(cell), "polygon_id": pid,
-                                 "is_full": bool(is_full),
-                                 "west": w, "south": s, "east": e, "north": n,
-                                 "ring_json": rj})
-            yield pd.DataFrame(rows, columns=cols)
+            pos, arrs = _usable_rings(pdf["ring"])
+            ix = cover_index(arrs, res, res)
+            owner = ix.pop("owner")
+            ring_json = np.asarray([json.dumps(a.tolist()) for a in arrs], dtype=object)
+            yield pd.DataFrame({
+                "cell": ix.pop("cell"),
+                "polygon_id": pdf["polygon_id"].to_numpy()[pos][owner],
+                **ix, "ring_json": ring_json[owner]})
 
     return polygons.select("polygon_id", "ring").mapInPandas(
         kernel, "cell long, polygon_id string, is_full boolean, "
@@ -427,10 +337,8 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
                      res: int = 7) -> DataFrame:
     """Shuffle-join variant for polygon sets too big to broadcast.
 
-    polygon_cells: DataFrame(cell long, polygon_id string, ring_json
-    string) plus, when produced by polygon_cells_at_res, is_full and
-    west/south/east/north — those enable the FULL-cell bypass and the
-    JVM bbox prefilter; the minimal 3-column schema still works.
+    polygon_cells: polygon_cells_at_res output, (cell, polygon_id,
+    is_full, west, south, east, north, ring_json).
 
     Round-6 plan (guide §8: decide on light rows, move heavy bytes
     once). The round-5 shape attached ring_json to EVERY candidate row
@@ -463,11 +371,8 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
     polygon_cells = polygon_cells.localCheckpoint(eager=True)
     if salt is None:
         salt = auto_salt(polygon_cells)
-    has_full = "is_full" in polygon_cells.columns
-    has_bbox = "west" in polygon_cells.columns
-    meta_cols = ["cell", "polygon_id"] + (["is_full"] if has_full else []) \
-        + (["west", "south", "east", "north"] if has_bbox else [])
-    cells_meta = polygon_cells.select(*meta_cols)
+    cells_meta = polygon_cells.select(
+        "cell", "polygon_id", "is_full", "west", "south", "east", "north")
     # the rings side re-reads the same input as cells_meta; rename its
     # key so the cogroup below is not an ambiguous self-join
     rings_tbl = polygon_cells.select(
@@ -481,24 +386,18 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
     )
     candidates = pts.repartition("cell", "_salt").join(
         replicated, ["cell", "_salt"], "inner"
-    ).drop("_salt")
-    if has_bbox:
-        candidates = candidates.where(
-            (F.col(lon_col) >= F.col("west")) & (F.col(lon_col) <= F.col("east"))
-            & (F.col(lat_col) >= F.col("south")) & (F.col(lat_col) <= F.col("north"))
-        ).drop("west", "south", "east", "north")
+    ).drop("_salt").where(
+        (F.col(lon_col) >= F.col("west")) & (F.col(lon_col) <= F.col("east"))
+        & (F.col(lat_col) >= F.col("south")) & (F.col(lat_col) <= F.col("north"))
+    ).drop("west", "south", "east", "north")
 
     out_names = [n for n in candidates.schema.fieldNames() if n != "is_full"]
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in candidates.schema.fields if f.name in out_names)
 
-    if has_full:
-        full_hits = candidates.where(F.col("is_full")).drop("is_full")
-        partial = candidates.where(~F.col("is_full")).drop("is_full")
-    else:
-        full_hits = None
-        partial = candidates
+    full_hits = candidates.where(F.col("is_full")).drop("is_full")
+    partial = candidates.where(~F.col("is_full")).drop("is_full")
 
     def exact_cogroup(key, cand: pd.DataFrame, ring_pdf: pd.DataFrame
                       ) -> pd.DataFrame:
@@ -515,6 +414,4 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
         .cogroup(rings_tbl.groupBy("_ring_pid"))
         .applyInPandas(exact_cogroup, schema)
     )
-    if full_hits is None:
-        return exact_hits
     return full_hits.select(*out_names).unionByName(exact_hits)

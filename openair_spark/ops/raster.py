@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index import quadkey
-from .pip import CELL_INDEX_SCHEMA, build_cell_index
+from .pip import broadcast_sides, list_setup
 
 
 def tiles_from_points(points: DataFrame, res: int,
@@ -42,19 +42,15 @@ def assign_tiles(tiles: DataFrame, polygons: list[dict], res: int,
                  tile_col: str = "tile") -> DataFrame:
     """tiles(tile, ...) x polygons -> (tile rows, polygon_id).
 
-    The polygon cover is built at exactly the tile resolution so the
-    join key is the tile id itself; FULL cover cells assign directly,
-    PARTIAL cells test the tile center in the Arrow kernel.
+    The polygon cover is built at exactly the tile resolution (the
+    pip_join setup at min_res = max_res = res) so the join key is the
+    tile id itself; FULL cover cells assign directly, PARTIAL cells test
+    the tile center in the kernel. The kernel carries the int
+    polygon_idx; a broadcast dim join restores polygon_id.
     """
-    from ..index.pip import RingSet
-
-    spark = tiles.sparkSession
-    index_pdf = build_cell_index(polygons, min_res=res, max_res=res)
-    index_df = spark.createDataFrame(index_pdf, CELL_INDEX_SCHEMA).drop(
-        "west", "south", "east", "north")
-    rings_b = spark.sparkContext.broadcast(
-        RingSet({p["polygon_id"]: np.asarray(p["ring"], dtype=np.float64)
-                 for p in polygons}))
+    rings_b, index_df, dim = broadcast_sides(
+        tiles.sparkSession, *list_setup(polygons, res, res))
+    index_df = index_df.drop("west", "south", "east", "north")
 
     cand = tiles.join(F.broadcast(index_df), tiles[tile_col] == index_df.cell, "inner").drop("cell")
     out_fields = [f for f in cand.schema.fields if f.name != "is_full"]
@@ -62,7 +58,7 @@ def assign_tiles(tiles: DataFrame, polygons: list[dict], res: int,
     names = [f.name for f in out_fields]
 
     def center_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rs: RingSet = rings_b.value
+        rs = rings_b.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -74,11 +70,12 @@ def assign_tiles(tiles: DataFrame, polygons: list[dict], res: int,
                 west, south, east, north = quadkey.cell_bounds(cells)
                 cx = (np.asarray(west) + np.asarray(east)) / 2.0
                 cy = (np.asarray(south) + np.asarray(north)) / 2.0
-                ridx = pdf["polygon_id"].iloc[part].map(rs.idx_of).to_numpy(dtype=np.int64)
+                ridx = pdf["polygon_idx"].to_numpy(dtype=np.int64)[part]
                 keep[part] = rs.contains(cx, cy, ridx)
             yield pdf.loc[keep, names]
 
-    return cand.mapInPandas(center_kernel, schema)
+    hits = cand.mapInPandas(center_kernel, schema)
+    return hits.join(F.broadcast(dim), "polygon_idx").drop("polygon_idx")
 
 
 def zonal_stats(assigned: DataFrame, value_col: str = "tile_value") -> DataFrame:

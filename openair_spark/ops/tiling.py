@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..index import h3, quadkey, s2
-from ..index.cover import compact_cover, cover_batch
+from ..index.cover import cover_batch
 
 TILES_SCHEMA = (
     "url string, airspace_idx int, cell long, res int, is_full boolean, "

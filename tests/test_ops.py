@@ -3,7 +3,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -14,8 +13,9 @@ from openair_spark.index import quadkey
 from openair_spark.index.pip import points_in_ring
 from openair_spark.ops.checkpoint import run_partitioned, read_manifest
 from openair_spark.ops.knn import knn_bruteforce, knn_join
-from openair_spark.ops.pip import build_cell_index, pip_join, pip_join_shuffle
+from openair_spark.ops.pip import pip_join, pip_join_shuffle, polygon_cells_at_res
 from openair_spark.ops.raster import assign_tiles, tiles_from_points, zonal_stats
+from test_textops import SF as _SF0001
 
 
 def _ring(lon0, lat0, d):
@@ -63,16 +63,16 @@ def test_pip_join_broadcast_exact(points, spark):
     assert len(got) > 0
 
 
+def _polygons_df(spark, polygons):
+    return spark.createDataFrame(
+        [(p["polygon_id"], p["ring"]) for p in polygons],
+        "polygon_id string, ring array<array<double>>")
+
+
 def test_pip_join_shuffle_matches_broadcast(points, spark):
     rows = points.collect()
     expected = _expected_pairs(rows)
-    # flat res-7 cover for the shuffle variant
-    cells = []
-    for poly in POLYGONS:
-        pdf = build_cell_index([poly], min_res=7, max_res=7)
-        for _, row in pdf.iterrows():
-            cells.append((int(row["cell"]), poly["polygon_id"], json.dumps(poly["ring"])))
-    cells_df = spark.createDataFrame(cells, "cell long, polygon_id string, ring_json string")
+    cells_df = polygon_cells_at_res(_polygons_df(spark, POLYGONS), res=7)
     got = {
         (r["point_id"], r["polygon_id"])
         for r in pip_join_shuffle(points, cells_df, salt=4, res=7)
@@ -88,9 +88,7 @@ def test_pip_join_auto_routes_to_shuffle(points, spark):
     set the broadcast plan produces on the same data."""
     from openair_spark.ops import pip as pip_mod
 
-    polys_df = spark.createDataFrame(
-        [(p["polygon_id"], p["ring"]) for p in POLYGONS],
-        "polygon_id string, ring array<array<double>>")
+    polys_df = _polygons_df(spark, POLYGONS)
 
     broadcast_hits = {
         (r["point_id"], r["polygon_id"])
@@ -294,18 +292,17 @@ def test_mega_polygon_skew_split_and_pip(spark):
     assert hits == {("deep-inside", "fir"), ("in-both", "fir"), ("in-both", "small")}
 
 
-def test_collect_ring_set_flat_edges(spark):
-    """collect_ring_set builds the same CSR edge arrays as the
+def test_polygon_setup_ring_set_matches_nested_constructor(spark):
+    """The DataFrame route's setup (one executor pass, RingSet from the
+    sorted edge rows) builds the same CSR edge arrays per polygon as the
     nested-list constructor, and tolerates an empty polygon set."""
-    import numpy as np
-
     from openair_spark.index.pip import RingSet
-    from openair_spark.ops.pip import collect_ring_set
+    from openair_spark.ops.pip import _polygon_setup, _split_setup
 
     polys = [(pid, [[float(i), float(i)] for i in range(n)] + [[0.0, 0.0]])
              for pid, n in (("a", 4), ("b", 6), ("c", 3))]
     df = spark.createDataFrame(polys, "polygon_id string, ring array<array<double>>")
-    flat = collect_ring_set(df)
+    flat, _ = _split_setup(_polygon_setup(df, 7, 9).toPandas())
     ref = RingSet({pid: np.asarray(ring) for pid, ring in polys})
     for pid in ("a", "b", "c"):
         i, j = flat.idx_of[pid], ref.idx_of[pid]
@@ -316,8 +313,76 @@ def test_collect_ring_set_flat_edges(spark):
             assert (getattr(flat, attr)[sl_f] == getattr(ref, attr)[sl_r]).all()
 
     empty = spark.createDataFrame([], "polygon_id string, ring array<array<double>>")
-    rs = collect_ring_set(empty)
-    assert rs.ids == [] and len(rs.x1) == 0
+    rs, index_pdf = _split_setup(_polygon_setup(empty, 7, 9).toPandas())
+    assert rs.ids == [] and len(rs.x1) == 0 and len(index_pdf) == 0
+
+
+def test_pip_join_empty_polygon_frame(points, spark):
+    """An empty polygon DataFrame yields zero hits on both routes."""
+    from openair_spark.ops import pip as pip_mod
+
+    empty = spark.createDataFrame([], "polygon_id string, ring array<array<double>>")
+    # zero edges exceed only a negative cap
+    for cap, route in ((pip_mod.DEFAULT_MAX_BROADCAST_EDGES, "broadcast"), (-1, "shuffle")):
+        hits = pip_join(points, empty, max_broadcast_edges=cap)
+        assert pip_mod.LAST_ROUTE == route
+        assert hits.count() == 0
+        assert set(hits.columns) == {"point_id", "lat", "lon", "polygon_id"}
+
+
+def test_null_and_short_rings_get_no_hits(points, spark):
+    """A polygon with a null ring, or with fewer than 4 ring points, gets
+    no hits; the valid polygons keep theirs on the broadcast route, the
+    shuffle route and the raster assignment."""
+    from openair_spark.ops import pip as pip_mod
+
+    bad = [{"polygon_id": "null-ring", "ring": None},
+           {"polygon_id": "short-ring", "ring": [[10.0, 50.0], [11.0, 50.5], [10.0, 50.0]]}]
+    polys_df = _polygons_df(spark, POLYGONS + bad)
+    expected = _expected_pairs(points.collect())
+    for cap, route in ((pip_mod.DEFAULT_MAX_BROADCAST_EDGES, "broadcast"), (1, "shuffle")):
+        hits = pip_join(points, polys_df, max_broadcast_edges=cap)
+        assert pip_mod.LAST_ROUTE == route
+        assert {(r["point_id"], r["polygon_id"])
+                for r in hits.select("point_id", "polygon_id").collect()} == expected
+    assert {(r["point_id"], r["polygon_id"])
+            for r in pip_join(points, POLYGONS + bad).collect()} == expected
+
+    tiles = tiles_from_points(points.withColumn("value", F.lit(1.0)), res=8).cache()
+
+    def assigned(polygons):
+        return {(r["tile"], r["polygon_id"])
+                for r in assign_tiles(tiles, polygons, res=8).collect()}
+
+    want = assigned(POLYGONS)
+    assert want and assigned(POLYGONS + bad) == want
+
+
+# the sf0.01 tables sit beside the sf0.001 ones that test_textops reads
+_SF001 = os.path.join(os.path.dirname(_SF0001), "sf0.01")
+
+
+@pytest.mark.skipif(not os.path.isdir(_SF001),
+                    reason=f"sf0.01 test data not present at {_SF001}")
+def test_pip_convex_and_raster_assign_match_duckdb_oracle(spark):
+    """The declared oracle queries that run the pip_join list route and
+    assign_tiles return exactly their DuckDB SQL rows at sf0.01."""
+    import duckdb
+
+    from openair_spark.queries import build_catalog
+
+    catalog = build_catalog()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW customer AS SELECT * FROM '{_SF001}/customer.parquet'")
+    for name in ("pip_convex", "raster_assign"):
+        query = catalog[name]
+        df = query.spark_fn(spark, _SF001)
+        cols = sorted(df.columns)
+        got = sorted(tuple(r[c] for c in cols) for r in df.collect())
+        oracle = con.execute(query.oracle_sql)
+        names = [d[0] for d in oracle.description]
+        want = sorted(tuple(row[names.index(c)] for c in cols) for row in oracle.fetchall())
+        assert got == want and len(got) > 0, name
 
 
 def test_h3_cover_antimeridian_superset():

@@ -21,15 +21,11 @@ def main() -> None:
     outdir = sys.argv[1]
     suffix = sys.argv[2] if len(sys.argv) > 2 else "after"
     os.makedirs(outdir, exist_ok=True)
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "12g")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    from openair_spark.spark.session import get_spark
+
+    spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     from openair_spark.ops.pip import (pip_join, pip_join_shuffle,

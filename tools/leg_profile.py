@@ -1,7 +1,7 @@
 """Per-phase profiling of the expensive bench legs (guide §1: measure
-first). Mirrors bench.py's session config exactly; times each driver
-action inside a leg separately so the slow phase is identified, not
-guessed. Usage:
+first). Runs in the engine's own session (spark/session.py::get_spark);
+times each driver action inside a leg separately so the slow phase is
+identified, not guessed. Usage:
 
   python tools/leg_profile.py pip|h3|minhash|ann [repeats]
 
@@ -18,28 +18,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def session(cpus="32"):
-    from pyspark.sql import SparkSession
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("leg-profile")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def profile_pip(spark, sf, feats):
     """pip_run split into its driver-visible phases."""
     from pyspark.sql import functions as F
 
     from openair_spark.ops import pip as pip_mod
-    from openair_spark.ops.pip import (collect_ring_set, polygon_cell_index,
-                                       pip_join)
+    from openair_spark.ops.pip import (MAX_RES, MIN_RES, _polygon_setup,
+                                       _split_setup, pip_join)
 
     t: dict[str, float] = {}
 
@@ -57,13 +42,12 @@ def profile_pip(spark, sf, feats):
     t["n_edges"] = int(n_edges)
 
     t0 = time.time()
-    rs = collect_ring_set(pp)
-    mark("collect_ring_set", t0)
-    t["n_polys"] = len(rs.ids)
-
+    setup = _polygon_setup(pp, MIN_RES, MAX_RES).toPandas()
+    mark("polygon_setup", t0)
     t0 = time.time()
-    index_pdf = polygon_cell_index(pp, 5, 9).toPandas()
-    mark("cell_index", t0)
+    rs, index_pdf = _split_setup(setup)
+    mark("split_setup", t0)
+    t["n_polys"] = len(rs.ids)
     t["n_index_rows"] = len(index_pdf)
     pp.unpersist()
 
@@ -117,7 +101,9 @@ def main():
     leg = sys.argv[1]
     repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = session(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from openair_spark.spark.session import get_spark
+
+    spark = get_spark("leg-profile")
     spark.sparkContext.setLogLevel("ERROR")
     feats = spark.read.parquet("/tmp/spark_graft_bench/features")
     feats.limit(16).count()
