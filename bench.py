@@ -5,7 +5,7 @@
    "throughput": {...}}
 
 Env: SPARK_GRAFT_SF_DIR       (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS         (default 32),
+     SPARK_GRAFT_CPUS         (default: this host's CPU count, as get_spark),
      SPARK_GRAFT_PAGES        (default scaled to sf),
      SPARK_GRAFT_BENCH_REPEATS (default 3; each leg reports its median).
 
@@ -30,7 +30,7 @@ PAGES_FOR_SF = {"sf0.001": 200, "sf0.01": 1500, "sf0.1": 8000}
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if not os.path.isdir(sf_dir):
         sys.exit(f"bench: SPARK_GRAFT_SF_DIR does not exist: {sf_dir}")
     sf_name = os.path.basename(sf_dir.rstrip("/"))

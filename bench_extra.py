@@ -1,11 +1,8 @@
-"""Supplementary benchmarks NOT in the frozen headline bench.
+"""Supplementary benchmarks beside the headline suite (bench.py).
 
-Round-6 additions (VERDICT r5 asks #4/#5):
   - pip_join_shuffle: the salted shuffle PIP route — the plan that
     carries the 100 TB story — timed on the same sf0.1 corpus and
     point cloud as the headline broadcast leg, with row counts.
-    (bench.py is frozen for measurement this round, so the leg lives
-    here instead of growing the headline suite.)
   - pip_join_noop / pip_join_broadcast: the broadcast leg isolated with
     the noop sink (guide §1.4) so the computation is timed without the
     count() aggregate shape.
@@ -13,7 +10,7 @@ Round-6 additions (VERDICT r5 asks #4/#5):
     boilerplate scrub over the 10x corpus (80k pages as documents).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: this host's CPU count, as get_spark),
      SPARK_GRAFT_BENCH_REPEATS (default 3, per-leg median).
 
 Prints ONE JSON line: {"legs": {name: sec}, "rows": {...},
@@ -33,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     try:
         sf = min(float(sf_name.replace("sf", "")), 1.0) if sf_name.startswith("sf") else 0.1

@@ -239,8 +239,33 @@ def _classify_cells_multi(cells: np.ndarray, owner: np.ndarray,
     return verdict
 
 
-_NO_CELLS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
-             np.empty(0, dtype=bool))
+class CoverCells:
+    """The cells a batched cover emits, level by level, each tagged with
+    its owner ring; `n` counts each ring's cells so far (the per-ring
+    max_cells cap). Shared by the quadkey, H3 and S2 covers (S2 ids are
+    uint64)."""
+
+    def __init__(self, n_rings: int, cell_dtype=np.int64):
+        self.parts: list = []
+        self.n = np.zeros(n_rings, dtype=np.int64)
+        self.cell_dtype = cell_dtype
+
+    def emit(self, cells, owner, res, is_full: bool) -> None:
+        if len(cells):
+            self.parts.append((owner, cells, np.broadcast_to(np.asarray(res, dtype=np.int64),
+                                                             (len(cells),)),
+                               np.full(len(cells), is_full)))
+            self.n += np.bincount(owner, minlength=len(self.n))
+
+    def arrays(self) -> tuple[np.ndarray, ...]:
+        """Flat (owner, cell, res, is_full) arrays sorted by owner; each
+        ring's cells keep their emission order."""
+        if not self.parts:
+            return (np.empty(0, dtype=np.int64), np.empty(0, dtype=self.cell_dtype),
+                    np.empty(0, dtype=np.int64), np.empty(0, dtype=bool))
+        owner, cell, res, full = (np.concatenate(a) for a in zip(*self.parts))
+        order = np.argsort(owner, kind="stable")
+        return owner[order], cell[order], res[order], full[order]
 
 
 def cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
@@ -254,8 +279,6 @@ def cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
     per-ring max_cells degrade semantics (asserted ring-by-ring over the
     full bench corpus and by tests/test_properties.py)."""
     nr = len(rings)
-    if nr == 0:
-        return _NO_CELLS
     rings = [np.asarray(r, dtype=np.float64) for r in rings]
     # CSR edge arrays shared by the crossing tests and the corner ray
     # casts (RingSet: x1/y1 are the segment start points = ring
@@ -263,10 +286,7 @@ def cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
     from .pip import RingSet
     rs = RingSet({i: r for i, r in enumerate(rings)})
 
-    out_cells: list = []
-    out_owner: list = []
-    out_full: list = []
-    n_out = np.zeros(nr, dtype=np.int64)
+    out = CoverCells(nr)
     done = np.zeros(nr, dtype=bool)
 
     # seeds: bbox rectangle fill at min_res per ring (same cells as
@@ -285,18 +305,8 @@ def cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
                  + (ys[:, None] << quadkey._Y_SHIFT) + xs[None, :]).ravel()
         seed_c.append(np.sort(cells))
         seed_o.append(np.full(len(cells), i, dtype=np.int64))
-    frontier = np.concatenate(seed_c)
-    fowner = np.concatenate(seed_o)
-
-    def emit(cells_arr, owner_arr, is_full) -> None:
-        nonlocal n_out
-        if len(cells_arr) == 0:
-            return
-        out_cells.append(np.asarray(cells_arr, dtype=np.int64))
-        out_owner.append(np.asarray(owner_arr, dtype=np.int64))
-        out_full.append(np.broadcast_to(
-            np.asarray(is_full, dtype=bool), (len(cells_arr),)).copy())
-        n_out += np.bincount(owner_arr, minlength=nr)
+    frontier = np.concatenate(seed_c or [np.empty(0, dtype=np.int64)])
+    fowner = np.concatenate(seed_o or [np.empty(0, dtype=np.int64)])
 
     while len(frontier):
         kinds = _classify_cells_multi(frontier, fowner, rs)
@@ -304,21 +314,21 @@ def cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
         # per-ring cap: same trigger as compact_cover (out + WHOLE
         # frontier incl. OUTSIDE cells), same degrade (emit non-OUTSIDE
         # frontier as partial, stop the ring)
-        over = (~done) & ((n_out + fcount) > max_cells)
+        over = (~done) & ((out.n + fcount) > max_cells)
+        res = frontier >> quadkey._RES_SHIFT
         if bool(over.any()):
             capped = over[fowner]
             keep_nz = capped & (kinds != OUTSIDE)
-            emit(frontier[keep_nz], fowner[keep_nz], False)
+            out.emit(frontier[keep_nz], fowner[keep_nz], res[keep_nz], False)
             done |= over
-            frontier, fowner, kinds = (frontier[~capped], fowner[~capped],
-                                       kinds[~capped])
+            frontier, fowner, kinds, res = (frontier[~capped], fowner[~capped],
+                                            kinds[~capped], res[~capped])
             if len(frontier) == 0:
                 break
-        res = (frontier >> quadkey._RES_SHIFT).astype(np.int64)
         full = kinds == FULL
-        emit(frontier[full], fowner[full], True)
+        out.emit(frontier[full], fowner[full], res[full], True)
         at_leaf = (kinds == PARTIAL) & (res >= max_res)
-        emit(frontier[at_leaf], fowner[at_leaf], False)
+        out.emit(frontier[at_leaf], fowner[at_leaf], res[at_leaf], False)
         refine = (kinds == PARTIAL) & (res < max_res)
         rc, ro = frontier[refine], fowner[refine]
         if len(rc) == 0:
@@ -338,18 +348,5 @@ def cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
         kids[3::4] = cr + ((base_y + 1) << quadkey._Y_SHIFT) + base_x + 1
         frontier, fowner = kids, kowner
 
-    if not out_cells:
-        return _NO_CELLS
-    owner = np.concatenate(out_owner)
-    order = np.argsort(owner, kind="stable")
-    return owner[order], np.concatenate(out_cells)[order], np.concatenate(out_full)[order]
-
-
-def cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
-                max_cells: int = 4096) -> list:
-    """cover_arrays as one [(cell_id, is_full)] list per ring."""
-    owner, cells, fulls = cover_arrays(rings, min_res, max_res, max_cells)
-    offs = np.searchsorted(owner, np.arange(len(rings) + 1))
-    return [list(zip(cells[offs[i]:offs[i + 1]].tolist(),
-                     fulls[offs[i]:offs[i + 1]].tolist()))
-            for i in range(len(rings))]
+    owner, cells, _, is_full = out.arrays()
+    return owner, cells, is_full

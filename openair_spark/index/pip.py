@@ -7,11 +7,16 @@ follow the half-open convention deterministically (same convention is
 encoded in the DuckDB oracle where PIP joins are oracle-checked on
 rectangles, where the convention reduces to closed-left/open-right
 range predicates).
+
+`usable_rings` is the one ring decoder behind every cover: the PIP and
+raster setup (ops/pip.py) and the tiles kernel (ops/_cover_common.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 
 def points_in_ring(px, py, ring) -> np.ndarray:
@@ -46,6 +51,31 @@ def ring_edges(rings: list) -> tuple[np.ndarray, ...]:
     first = last - lens
     return (lens, np.delete(v[:, 0], last), np.delete(v[:, 1], last),
             np.delete(v[:, 0], first), np.delete(v[:, 1], first))
+
+
+RING_TYPE = pa.list_(pa.list_(pa.float64()))
+
+
+def usable_rings(rings) -> tuple[np.ndarray, list[np.ndarray]]:
+    """Positions and (M, 2) float arrays of the rings a cover is built
+    for. `rings` is an Arrow list<list<double>> column (decoded without
+    per-point Python) or any sequence of rings, converted to one first.
+    A null ring, one with fewer than 4 points (a closed triangle), or
+    one with a point that is not a [lon, lat] pair gets no cover rows,
+    so its polygon gets no hits and no tiles."""
+    if isinstance(rings, pa.ChunkedArray):
+        rings = rings.combine_chunks()
+    elif not isinstance(rings, pa.Array):
+        rings = pa.array([None if r is None else list(r) for r in rings], RING_TYPE)
+    lens = pc.list_value_length(rings).fill_null(0).to_numpy(zero_copy_only=False)
+    pair = pc.equal(pc.list_value_length(rings.flatten()), 2).fill_null(False)
+    unpaired = np.bincount(np.repeat(np.arange(len(lens)), lens), minlength=len(lens),
+                           weights=~pair.to_numpy(zero_copy_only=False))
+    pos = np.flatnonzero((lens >= 4) & (unpaired == 0))
+    if len(pos) == 0:
+        return pos, []
+    xy = rings.take(pa.array(pos)).flatten().flatten().to_numpy(zero_copy_only=False)
+    return pos, np.split(xy.reshape(-1, 2), np.cumsum(lens[pos])[:-1])
 
 
 class RingSet:

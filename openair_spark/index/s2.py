@@ -22,6 +22,8 @@ trailing 1 "sentinel" bit, zero-padded.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 MAX_LEVEL = 30
 
@@ -163,7 +165,20 @@ def parent(cell, level: int):
 
 def cell_token(cell) -> str:
     """Canonical hex token of a scalar cell id."""
-    return format(np.uint64(np.asarray(cell).item()), "016x").rstrip("0") or "0"
+    return format(int(np.asarray(cell).item()) & 0xFFFFFFFFFFFFFFFF, "016x").rstrip("0") or "0"
+
+
+_HEX = np.frombuffer(b"0123456789abcdef", dtype=np.uint8)
+
+
+def cell_tokens(cells) -> pa.Array:
+    """cell_token of many (signed or unsigned) ids, as an Arrow string
+    array built without a Python object per id."""
+    c = np.asarray(cells).astype(np.uint64)
+    nibbles = (c[:, None] >> np.arange(60, -1, -4, dtype=np.uint64)) & np.uint64(15)
+    hexes = np.ascontiguousarray(_HEX[nibbles.astype(np.intp)]).view("S16").ravel()
+    tok = pc.utf8_rtrim(pa.array(hexes).cast(pa.string()), characters="0")
+    return pc.if_else(pc.equal(tok, ""), "0", tok)
 
 
 def decode(cell) -> tuple:

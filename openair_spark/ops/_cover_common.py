@@ -1,15 +1,24 @@
-"""Shared machinery of the batched polygon-cover classifiers
-(ops/h3tiles + ops/s2tiles): per-group ring geometry, the CSR
-(cell, own-ring segment) pair expansion with proper-crossing tests, and
-the grouped corner-in-ring split. One implementation so a fix to the
+"""Shared machinery of the polygon covers and their tiles operators.
+
+The batched H3 and S2 classifiers (ops/h3tiles + ops/s2tiles) share the
+per-group ring geometry, the x-strip (cell, own-ring segment) pair
+index with proper-crossing tests, the grouped corner-in-ring split and
+the ring-group driver. One implementation so a fix to the
 crossing/corner logic cannot silently diverge between the two covers.
+
+The quadkey, H3 and S2 tiles operators (ops/tiling, ops/h3tiles,
+ops/s2tiles) share one narrow mapInArrow kernel, `tiles_map`.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from ..index.pip import RingSet, points_in_ring
+from ..index.cover import CoverCells
+from ..index.pip import RingSet, points_in_ring, usable_rings
 
 # pair-expansion budget: the CSR expansion materializes
 # (chunk_cells x own-ring-segments) index/coordinate temporaries BEFORE
@@ -120,18 +129,6 @@ class RingBatch:
                            _MIN_CHUNK, _MAX_CHUNK))
 
 
-def expand_pairs(owner_chunk: np.ndarray, rs: RingSet):
-    """(crow, seg): CSR expansion of every (cell, own-ring segment)
-    pair for one chunk of cells (crow indexes the chunk)."""
-    lens = rs.lens[owner_chunk]
-    crow = np.repeat(np.arange(len(owner_chunk)), lens)
-    cum = np.cumsum(lens)
-    within = (np.arange(int(cum[-1]) if len(owner_chunk) else 0)
-              - np.repeat(cum - lens, lens))
-    seg = np.repeat(rs.starts[owner_chunk], lens) + within
-    return crow, seg
-
-
 def _orient(px, py, qx, qy, rx, ry):
     return (qx - px) * (ry - py) - (qy - py) * (rx - px)
 
@@ -222,3 +219,43 @@ def corner_split(hx1, hy1, partial: np.ndarray, owner: np.ndarray,
         all_in[in_rows] = True
         any_in[in_rows] = True
     return all_in, any_in
+
+
+def cover_groups(cover_group, rings: list, size: int, *args) -> tuple[np.ndarray, ...]:
+    """Flat (owner, cell, res, is_full) arrays, sorted by owner, of
+    `cover_group(rings[s:s + size], *args)` over groups of `size` rings:
+    level-batched kernels amortize numpy call overhead across a group
+    while each level's working set stays cache-sized."""
+    starts = range(0, len(rings), size)
+    parts = [cover_group(rings[s:s + size], *args) for s in starts]
+    if not parts:
+        return CoverCells(0).arrays()
+    owner = np.concatenate([part[0] + s for part, s in zip(parts, starts)])
+    return (owner, *(np.concatenate(a) for a in list(zip(*parts))[1:]))
+
+
+def tiles_map(features: DataFrame, schema: str, cover) -> DataFrame:
+    """The one tiles kernel: features(url, airspace_idx, ring, success,
+    geometry_type, ...) -> one row per cover cell, as a narrow
+    mapInArrow (no shuffle; a mega-polygon becomes many bounded cell
+    rows). Each Arrow batch's usable rings go to ONE `cover(rings)`
+    call, which returns (owner, *columns): the owning ring's position
+    per cell, then the grid's columns in `schema` order after url and
+    airspace_idx. Those two are gathered by Arrow `take`, so no Python
+    object is made per cell."""
+    src = (features.where(F.col("success") & (F.col("geometry_type") == "Polygon"))
+           .select("url", "airspace_idx", "ring"))
+    names = [c.split()[0] for c in schema.split(", ")]
+
+    def kernel(batches):
+        for rb in batches:
+            pos, rings = usable_rings(rb.column("ring"))
+            if rings:
+                owner, *cols = cover(rings)
+                row = pa.array(pos[owner])
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column("url").take(row),
+                     rb.column("airspace_idx").take(row).cast(pa.int32()),
+                     *map(pa.array, cols)], names=names)
+
+    return src.mapInArrow(kernel, schema)

@@ -17,9 +17,10 @@ The previous per-ring loop paid ~9 ms of fixed numpy-call overhead per
 cover regardless of size — ~35% of the whole bench leg at the corpus'
 median cover of ~1.7k cells.
 
-`h3_polygon_tiles` runs the batched cover inside an Arrow mapInPandas
-over the features DataFrame — narrow map, no shuffle; a mega-polygon
-becomes many bounded (h3_cell, res) rows (`max_cells` guard per ring).
+`h3_polygon_tiles` runs the batched cover inside the shared tiles
+kernel (ops/_cover_common.tiles_map, a narrow mapInArrow over the
+features DataFrame, no shuffle); a mega-polygon becomes many bounded
+(h3_cell, res) rows (`max_cells` guard per ring).
 
 Boundaries are substrate-exact (icosahedron edges, exact pentagons
 incl. class III distortion vertices — see index/h3.py); distortion
@@ -29,16 +30,13 @@ re-classify for the typically-empty face-seam subset).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 
 from ..index import h3
+from ..index.cover import CoverCells
 from ._cover_common import RingBatch as _RingBatch
-from ._cover_common import corner_split, expand_pairs, proper_crossings
+from ._cover_common import corner_split, cover_groups, proper_crossings, tiles_map
 
 OUTSIDE, PARTIAL, FULL = 0, 1, 2
 
@@ -140,17 +138,23 @@ def _classify_multi(bnds: np.ndarray, owner: np.ndarray, rb: _RingBatch,
 _RING_GROUP = 32
 
 
+def h3_cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
+                    max_cells: int = 16384) -> tuple[np.ndarray, ...]:
+    """Compact covers of many closed lon/lat rings as flat (owner,
+    h3_cell, res, is_full) arrays sorted by owner (the ring's position
+    in `rings`); level-batched kernels run over groups of _RING_GROUP
+    rings (see note above). Same cells as covering each ring alone."""
+    return cover_groups(_cover_group, rings, _RING_GROUP, min_res, max_res, max_cells)
+
+
 def h3_cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
                    max_cells: int = 16384) -> list:
-    """Compact covers of many closed lon/lat rings; level-batched
-    kernels run over groups of _RING_GROUP rings (see note above).
-    Returns one (n_i, 3) int64 array [h3_cell, res, is_full(0/1)] per
-    input ring (same cells as covering each ring alone)."""
-    out: list = []
-    for s in range(0, len(rings), _RING_GROUP):
-        out.extend(_cover_group(rings[s:s + _RING_GROUP],
-                                min_res, max_res, max_cells))
-    return out
+    """h3_cover_arrays as one (n_i, 3) int64 array [h3_cell, res,
+    is_full(0/1)] per input ring."""
+    owner, cell, res, full = h3_cover_arrays(rings, min_res, max_res, max_cells)
+    flat = np.stack([cell, res, full.astype(np.int64)], axis=1)
+    offs = np.searchsorted(owner, np.arange(len(rings) + 1))
+    return [flat[offs[i]:offs[i + 1]] for i in range(len(rings))]
 
 
 def _res_of(cells: np.ndarray) -> np.ndarray:
@@ -181,12 +185,21 @@ def _start_res_for(rings: list, min_res: int, max_cells: int) -> np.ndarray:
     return out
 
 
+# H3 cell ids share their top byte (reserved bit, mode 1, reserved
+# bits), so a ring-group owner (< 128) can take its place: one int64
+# key per (owner, cell) pair, ordered like the pair
+_LOW56 = (1 << 56) - 1
+
+
+def _pair_keys(owner: np.ndarray, cells: np.ndarray) -> np.ndarray:
+    return (owner << 56) | (cells & _LOW56)
+
+
 def _cover_group(rings: list, min_res: int, max_res: int,
-                 max_cells: int) -> list:
+                 max_cells: int) -> tuple[np.ndarray, ...]:
     """Compact covers of one group of rings in shared level-batched
-    kernels; returns one (n_i, 3) int64 array [h3_cell, res,
-    is_full(0/1)] per input ring (same cells as covering each ring
-    alone).
+    kernels, as flat (owner, h3_cell, res, is_full) arrays sorted by
+    owner (same cells as covering each ring alone).
 
     Membership semantics are the H3 compact-set ones: a point p is
     covered iff some ancestor-or-self of latlng_to_cell(p, max_res) is
@@ -200,32 +213,11 @@ def _cover_group(rings: list, min_res: int, max_res: int,
     ring overflowing during refinement emits its pending cells as
     PARTIAL leaves at their current resolution."""
     nr = len(rings)
-    if nr == 0:
-        return []
     rings = [np.asarray(r, dtype=np.float64) for r in rings]
     t = h3._tables()
     rb = _RingBatch(rings)
     start_res = _start_res_for(rings, min_res, max_cells)
-
-    # ---- per-ring emission bookkeeping (split by owner at the end)
-    out_cells: list = []
-    out_owner: list = []
-    out_res: list = []
-    out_full: list = []
-    n_out = np.zeros(nr, dtype=np.int64)
-
-    def emit(cells_arr, owner_arr, res_v, is_full: bool) -> None:
-        nonlocal n_out
-        if len(cells_arr) == 0:
-            return
-        out_cells.append(np.asarray(cells_arr, dtype=np.int64))
-        out_owner.append(np.asarray(owner_arr, dtype=np.int64))
-        out_res.append(np.full(len(cells_arr), res_v, dtype=np.int64)
-                       if np.ndim(res_v) == 0
-                       else np.asarray(res_v, dtype=np.int64))
-        out_full.append(np.full(len(cells_arr), 1 if is_full else 0,
-                                dtype=np.int64))
-        n_out += np.bincount(owner_arr, minlength=nr)
+    out = CoverCells(nr)
 
     def classify_level(cells_arr, owner_arr, dilate) -> np.ndarray:
         # sparse distortion handles mixed-parity batches: only class III
@@ -259,16 +251,11 @@ def _cover_group(rings: list, min_res: int, max_res: int,
         + [np.arange(nr, dtype=np.int64)])
     seed_cells = forward_cells(seed_lat, seed_lon, seed_owner)
 
-    seen = [set() for _ in range(nr)]
-    fr_c: list = []
-    fr_o: list = []
-    for c, o in zip(seed_cells, seed_owner):
-        if int(c) not in seen[o]:
-            seen[o].add(int(c))
-            fr_c.append(int(c))
-            fr_o.append(int(o))
-    frontier = np.asarray(fr_c, dtype=np.int64)
-    fowner = np.asarray(fr_o, dtype=np.int64)
+    # first occurrence of each (owner, cell), in seed order; `seen` is
+    # the sorted key set of every pair found so far
+    seen, first = np.unique(_pair_keys(seed_owner, seed_cells), return_index=True)
+    first = np.sort(first)
+    frontier, fowner = seed_cells[first], seed_owner[first]
     seen_count = np.bincount(fowner, minlength=nr)
 
     part_c = np.empty(0, dtype=np.int64)   # accumulated PARTIAL cells
@@ -282,7 +269,7 @@ def _cover_group(rings: list, min_res: int, max_res: int,
         dil = np.where(fres < max_res, _CHILD_OVERHANG_DILATION, 0.0)
         v = classify_level(frontier, fowner, dil)
         full = v == FULL
-        emit(frontier[full], fowner[full], fres[full], True)
+        out.emit(frontier[full], fowner[full], fres[full], True)
         keep = v == PARTIAL
         part_c = np.concatenate([part_c, frontier[keep]])
         part_o = np.concatenate([part_o, fowner[keep]])
@@ -300,35 +287,24 @@ def _cover_group(rings: list, min_res: int, max_res: int,
             px, py, np.repeat(f, 6), np.repeat(res, 6))
         nbo = np.repeat(eowner, 6)
         nbs = forward_cells(np.degrees(plat), np.degrees(plon), nbo)
-        # dedup (owner, cell) within the round, then against `seen`
-        pairs = np.unique(np.stack([nbo, nbs], axis=1), axis=0)
-        fr_c, fr_o = [], []
-        cap_c, cap_o = [], []
-        for o, c in pairs:
-            o = int(o)
-            c = int(c)
-            if c in seen[o]:
-                continue
-            seen[o].add(c)
-            if seen_count[o] > max_cells:
-                # over-budget ring (backstop — the adaptive start res
-                # should prevent this): the discovered neighbor still
-                # becomes a PARTIAL leaf instead of being dropped, so
-                # its territory stays covered; the refinement cap then
-                # flushes it at its own res
-                cap_c.append(c)
-                cap_o.append(o)
-                continue
-            seen_count[o] += 1
-            fr_c.append(c)
-            fr_o.append(o)
-        if cap_c:
-            part_c = np.concatenate(
-                [part_c, np.asarray(cap_c, dtype=np.int64)])
-            part_o = np.concatenate(
-                [part_o, np.asarray(cap_o, dtype=np.int64)])
-        frontier = np.asarray(fr_c, dtype=np.int64)
-        fowner = np.asarray(fr_o, dtype=np.int64)
+        # dedup (owner, cell) within the round, then against `seen`;
+        # new pairs come out sorted by (owner, cell)
+        keys, first = np.unique(_pair_keys(nbo, nbs), return_index=True)
+        new = seen[np.minimum(np.searchsorted(seen, keys), len(seen) - 1)] != keys
+        seen = np.union1d(seen, keys[new])
+        nc, no = nbs[first[new]], nbo[first[new]]
+        # a ring takes new cells in (owner, cell) order while it has
+        # seen at most max_cells; the rest of an over-budget ring
+        # (backstop — the adaptive start res should prevent this) still
+        # become PARTIAL leaves instead of being dropped, so their
+        # territory stays covered; the refinement cap then flushes them
+        # at their own res
+        rank = np.arange(len(no)) - np.searchsorted(no, no)
+        take = seen_count[no] + rank <= max_cells
+        part_c = np.concatenate([part_c, nc[~take]])
+        part_o = np.concatenate([part_o, no[~take]])
+        frontier, fowner = nc[take], no[take]
+        seen_count += np.bincount(fowner, minlength=nr)
         # backstop: should be unreachable with the adaptive start res —
         # rings that somehow exceed the budget mid-flood turn their
         # pending frontier into PARTIAL leaves
@@ -351,10 +327,10 @@ def _cover_group(rings: list, min_res: int, max_res: int,
         # per-ring cap: rings whose cover would overflow emit their
         # parents as partial leaves at their own res and stop
         add = np.bincount(owner_c, minlength=nr)
-        over = (n_out + add) > max_cells
+        over = (out.n + add) > max_cells
         if bool(over.any()):
             capped = over[part_o]
-            emit(part_c[capped], part_o[capped], _res_of(part_c[capped]), False)
+            out.emit(part_c[capped], part_o[capped], _res_of(part_c[capped]), False)
             keep = ~over[owner_c]
             children, owner_c = children[keep], owner_c[keep]
             if len(children) == 0:
@@ -365,32 +341,20 @@ def _cover_group(rings: list, min_res: int, max_res: int,
         dil = np.where(child_res < max_res, _CHILD_OVERHANG_DILATION, 0.0)
         v = classify_level(children, owner_c, dil)
         full = v == FULL
-        emit(children[full], owner_c[full], child_res[full], True)
+        out.emit(children[full], owner_c[full], child_res[full], True)
         part = v == PARTIAL
         at_leaf = part & (child_res >= max_res)
-        emit(children[at_leaf], owner_c[at_leaf], child_res[at_leaf], False)
+        out.emit(children[at_leaf], owner_c[at_leaf], child_res[at_leaf], False)
         keep = part & (child_res < max_res)
         part_c, part_o = children[keep], owner_c[keep]
-    emit(part_c, part_o, max_res, False)
-
-    # ---- split per ring (stable by emission order)
-    if not out_cells:
-        return [np.empty((0, 3), dtype=np.int64) for _ in range(nr)]
-    cells = np.concatenate(out_cells)
-    owner = np.concatenate(out_owner)
-    res_a = np.concatenate(out_res)
-    full_a = np.concatenate(out_full)
-    order = np.argsort(owner, kind="stable")
-    flat = np.stack([cells[order], res_a[order], full_a[order]], axis=1)
-    counts = np.bincount(owner, minlength=nr)
-    offs = np.concatenate([[0], np.cumsum(counts)])
-    return [flat[offs[i]:offs[i + 1]] for i in range(nr)]
+    out.emit(part_c, part_o, max_res, False)
+    return out.arrays()
 
 
 def h3_cover(ring, min_res: int = 5, max_res: int = 9,
              max_cells: int = 16384) -> np.ndarray:
     """(n, 3) int64 array [h3_cell, res, is_full(0/1)]: compact cover of
-    ONE closed lon/lat ring (see h3_cover_batch for semantics)."""
+    ONE closed lon/lat ring (see _cover_group for semantics)."""
     return h3_cover_batch([ring], min_res, max_res, max_cells)[0]
 
 
@@ -401,55 +365,15 @@ H3_TILES_SCHEMA = ("url string, airspace_idx int, h3_cell long, h3_res int, "
 def h3_polygon_tiles(features: DataFrame, min_res: int = 5, max_res: int = 9,
                      max_cells: int = 16384) -> DataFrame:
     """features(url, airspace_idx, ring, ...) -> one row per H3 cover
-    cell. Narrow Arrow map (no shuffle); default res range 5-9 is the
-    north-star mandate depth. The whole Arrow batch covers in ONE
-    h3_cover_batch call (level-batched across polygons); output batches
-    assemble as Arrow arrays directly (mapInArrow) — `take` replicates
-    each polygon's url across its cover rows inside Arrow C++, where
-    the previous pandas assembly materialized one Python string object
-    per emitted row (~14.5M at sf0.1, a measurable slice of the leg)."""
-    from pyspark.sql import functions as F
-
-    src = (
-        features.where(F.col("success") & (F.col("geometry_type") == "Polygon"))
-        .select("url", "airspace_idx", "ring")
-    )
+    cell, through the shared tiles kernel (ops/_cover_common.tiles_map);
+    default res range 5-9 is the north-star mandate depth. Each Arrow
+    batch covers in ONE h3_cover_arrays call (level-batched across
+    polygons)."""
     h3_tables = h3._tables()  # once on the driver; seeded into workers
 
-    def kernel(batches):
-        import pyarrow as pa
-
+    def cover(rings):
         h3.seed_tables(h3_tables)
-        names = [c.split()[0] for c in H3_TILES_SCHEMA.split(", ")]
-        for rb in batches:
-            url_col = rb.column(rb.schema.get_field_index("url"))
-            idx_col = rb.column(rb.schema.get_field_index("airspace_idx"))
-            ring_col = rb.column(rb.schema.get_field_index("ring"))
-            keep_rows: list = []
-            rings: list = []
-            for i, ring in enumerate(ring_col.to_pylist()):
-                if ring is None or len(ring) < 4:
-                    continue
-                keep_rows.append(i)
-                rings.append(np.asarray(ring, dtype=np.float64))
-            if not rings:
-                continue
-            covers = h3_cover_batch(rings, min_res, max_res, max_cells)
-            counts = np.asarray([len(c) for c in covers], dtype=np.int64)
-            flat = np.concatenate(covers)
-            if len(flat) == 0:
-                continue
-            # row i of the kept set owns counts[i] consecutive output
-            # rows: replicate the source row index and let Arrow gather
-            # the string/int columns without touching Python objects
-            src_idx = pa.array(np.repeat(
-                np.asarray(keep_rows, dtype=np.int64), counts))
-            yield pa.RecordBatch.from_arrays([
-                url_col.take(src_idx),
-                idx_col.take(src_idx).cast(pa.int32()),
-                pa.array(flat[:, 0]),
-                pa.array(flat[:, 1].astype(np.int32)),
-                pa.array(flat[:, 2].astype(bool)),
-            ], names=names)
+        owner, cell, res, full = h3_cover_arrays(rings, min_res, max_res, max_cells)
+        return owner, cell, res.astype(np.int32), full
 
-    return src.mapInArrow(kernel, H3_TILES_SCHEMA)
+    return tiles_map(features, H3_TILES_SCHEMA, cover)

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..index import quadkey
 from ..index.cover import cover_arrays
-from ..index.pip import RingSet, points_in_ring, ring_edges
+from ..index.pip import RingSet, points_in_ring, ring_edges, usable_rings
 
 # Cover band for the PIP probe index. min 7 (not the tile mandate's 5):
 # every cover resolution the index USES adds one exploded probe row PER
@@ -52,19 +52,6 @@ from ..index.pip import RingSet, points_in_ring, ring_edges
 # part of the result.
 MIN_RES = 7
 MAX_RES = 9
-
-
-def _usable_rings(rings) -> tuple[np.ndarray, list[np.ndarray]]:
-    """Positions and (M, 2) float arrays of the rings a cover is built
-    for. A null ring, or one with fewer than 4 points (a closed
-    triangle), gets no cover rows, so its polygon gets no hits."""
-    pos, arrs = [], []
-    for i, ring in enumerate(rings):
-        if ring is None or len(ring) < 4:
-            continue
-        pos.append(i)
-        arrs.append(np.asarray(list(ring), dtype=np.float64))
-    return np.asarray(pos, dtype=np.int64), arrs
 
 
 def cover_index(rings: list[np.ndarray], min_res: int, max_res: int) -> dict:
@@ -96,7 +83,7 @@ def _setup_rows(polygons: pd.DataFrame, min_res: int, max_res: int) -> pd.DataFr
     """polygons(polygon_id, ring) -> both broadcast-route inputs as one
     frame: cover index rows (kind=0: a=cell, b=is_full, x1..y2=bbox) and
     ring edge rows (kind=1: a=edge_idx, x1,y1,x2,y2=edge)."""
-    pos, arrs = _usable_rings(polygons["ring"])
+    pos, arrs = usable_rings(polygons["ring"])
     ix = cover_index(arrs, min_res, max_res)
     lens, ex1, ey1, ex2, ey2 = ring_edges(arrs)
     eowner = np.repeat(np.arange(len(arrs)), lens)
@@ -301,7 +288,7 @@ def polygon_cells_at_res(polygons: DataFrame, res: int = 7) -> DataFrame:
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            pos, arrs = _usable_rings(pdf["ring"])
+            pos, arrs = usable_rings(pdf["ring"])
             ix = cover_index(arrs, res, res)
             owner = ix.pop("owner")
             ring_json = np.asarray([json.dumps(a.tolist()) for a in arrs], dtype=object)

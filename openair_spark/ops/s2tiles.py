@@ -20,21 +20,19 @@ own sorted leaf ids. Pole-holding cells (corner block still spanning
 ring's latitude band — |lat| over an S2 cell is extremized at a
 uv-corner, so corner latitudes bound the cell's reach exactly.
 
-`s2_polygon_tiles` fans the cover over the features DataFrame in one
-narrow Arrow map (mega-polygons split into bounded cell rows).
+`s2_polygon_tiles` fans the cover over the features DataFrame through
+the shared tiles kernel (ops/_cover_common.tiles_map, one narrow
+mapInArrow; mega-polygons split into bounded cell rows).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 
 from ..index import s2
-from ._cover_common import RingBatch, corner_split, expand_pairs, proper_crossings
+from ..index.cover import CoverCells
+from ._cover_common import RingBatch, corner_split, cover_groups, proper_crossings, tiles_map
 
 OUTSIDE, PARTIAL, FULL = 0, 1, 2
 # straight lon/lat chords understate the geodesic cell edges; 5% corner
@@ -151,32 +149,35 @@ def _classify_level_multi(cells: np.ndarray, owner: np.ndarray, level: int,
     return verdict
 
 
+def s2_cover_arrays(rings: list, max_level: int = 10,
+                    max_cells: int = 16384) -> tuple[np.ndarray, ...]:
+    """Compact S2 covers of many closed lon/lat rings as flat (owner,
+    cell_id, level, is_full) arrays sorted by owner (the ring's position
+    in `rings`); ids are unsigned uint64. Same cells as covering each
+    ring alone. FULL cells stay at the coarsest level the curvature-safe
+    test allows (>= 3, the compact form); PARTIAL cells refine to
+    max_level. Membership: a point is covered iff its level-30 leaf id
+    lies in some cover cell's id range. `max_cells` bounds each ring
+    independently (its remaining frontier is emitted as partial
+    leaves)."""
+    return cover_groups(_cover_group, rings, _RING_GROUP, max_level, max_cells)
+
+
 def s2_cover_batch(rings: list, max_level: int = 10,
                    max_cells: int = 16384) -> list:
-    """Compact S2 covers of many closed lon/lat rings; returns one
-    (n_i, 3) array-backed list [(cell_id, level, is_full)] per ring
-    (same cells as covering each ring alone). FULL cells stay at the
-    coarsest level the curvature-safe test allows (>= 3, the compact
-    form); PARTIAL cells refine to max_level. Membership: a point is
-    covered iff its level-30 leaf id lies in some cover cell's id range.
-    `max_cells` bounds each ring independently (its remaining frontier
-    is emitted as partial leaves)."""
-    out_all: list = []
-    for s in range(0, len(rings), _RING_GROUP):
-        out_all.extend(_cover_group(rings[s:s + _RING_GROUP],
-                                    max_level, max_cells))
-    return out_all
+    """s2_cover_arrays as one [(cell_id, level, is_full)] list per ring
+    (unsigned ids)."""
+    owner, cell, level, full = s2_cover_arrays(rings, max_level, max_cells)
+    rows = list(zip(cell.tolist(), level.tolist(), full.tolist()))
+    offs = np.searchsorted(owner, np.arange(len(rings) + 1))
+    return [rows[offs[i]:offs[i + 1]] for i in range(len(rings))]
 
 
-def _cover_group(rings: list, max_level: int, max_cells: int) -> list:
-    nr = len(rings)
-    if nr == 0:
-        return []
+def _cover_group(rings: list, max_level: int, max_cells: int) -> tuple[np.ndarray, ...]:
     rings = [np.asarray(r, dtype=np.float64) for r in rings]
     rb = _S2RingBatch(rings)
-
-    outs: list = [[] for _ in range(nr)]
-    n_out = np.zeros(nr, dtype=np.int64)
+    nr = len(rings)
+    out = CoverCells(nr, np.uint64)
 
     faces = np.array([(f << 61) | (1 << 60) for f in range(6)],
                      dtype=np.uint64)
@@ -187,34 +188,29 @@ def _cover_group(rings: list, max_level: int, max_cells: int) -> list:
             break
         v = _classify_level_multi(frontier, fowner, level, rb)
         full_ok = (v == FULL) & (level >= 3)
-        for c, o in zip(frontier[full_ok], fowner[full_ok]):
-            outs[o].append((int(c), level, True))
-        n_out += np.bincount(fowner[full_ok], minlength=nr)
+        out.emit(frontier[full_ok], fowner[full_ok], level, True)
         desc = (v == PARTIAL) | ((v == FULL) & (level < 3))
         descend, downer = frontier[desc], fowner[desc]
         if level == max_level:
-            for c, o in zip(descend, downer):
-                outs[o].append((int(c), level, False))
+            out.emit(descend, downer, level, False)
             break
         kids = s2.children_arrays(descend)
         kowner = np.repeat(downer, 4)
         # per-ring cap: rings whose cover would overflow emit their
         # children as partial leaves and stop descending
         add = np.bincount(kowner, minlength=nr)
-        over = (n_out + add) > max_cells
+        over = (out.n + add) > max_cells
         if bool(over.any()):
             capped = over[kowner]
-            for c, o in zip(kids[capped], kowner[capped]):
-                outs[o].append((int(c), level + 1, False))
-            n_out += np.bincount(kowner[capped], minlength=nr)
+            out.emit(kids[capped], kowner[capped], level + 1, False)
             kids, kowner = kids[~capped], kowner[~capped]
         frontier, fowner = kids, kowner
-    return outs
+    return out.arrays()
 
 
 def s2_cover(ring, max_level: int = 10, max_cells: int = 16384) -> list:
     """[(cell_id, level, is_full)] compact S2 cover of ONE closed
-    lon/lat ring (see s2_cover_batch for semantics)."""
+    lon/lat ring (see s2_cover_arrays for semantics)."""
     return s2_cover_batch([ring], max_level, max_cells)[0]
 
 
@@ -225,55 +221,12 @@ S2_TILES_SCHEMA = ("url string, airspace_idx int, s2_cell long, s2_level int, "
 def s2_polygon_tiles(features: DataFrame,
                      max_level: int = 10, max_cells: int = 16384) -> DataFrame:
     """features(url, airspace_idx, ring, ...) -> one row per S2 cover
-    cell. Narrow Arrow map, no shuffle; each Arrow batch covers in
-    grouped s2_cover_batch calls."""
-    from pyspark.sql import functions as F
+    cell, through the shared tiles kernel (ops/_cover_common.tiles_map);
+    each Arrow batch covers in one grouped s2_cover_arrays call."""
 
-    src = (
-        features.where(F.col("success") & (F.col("geometry_type") == "Polygon"))
-        .select("url", "airspace_idx", "ring")
-    )
+    def cover(rings):
+        owner, cell, level, full = s2_cover_arrays(rings, max_level, max_cells)
+        # unsigned ids -> two's-complement int64 (Spark LongType)
+        return owner, cell.astype(np.int64), level.astype(np.int32), full
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split()[0] for c in S2_TILES_SCHEMA.split(", ")]
-        for pdf in batches:
-            urls: list = []
-            idxs: list = []
-            rings: list = []
-            for url, idx, ring in zip(pdf["url"], pdf["airspace_idx"], pdf["ring"]):
-                if ring is None or len(ring) < 4:
-                    continue
-                urls.append(url)
-                idxs.append(int(idx))
-                rings.append(np.asarray([list(p) for p in ring],
-                                        dtype=np.float64))
-            if not rings:
-                yield pd.DataFrame(columns=cols)
-                continue
-            covers = s2_cover_batch(rings, max_level, max_cells)
-            keep = [i for i, cov in enumerate(covers) if cov]
-            if not keep:
-                yield pd.DataFrame(columns=cols)
-                continue
-            counts = [len(covers[i]) for i in keep]
-            # unsigned ids -> two's-complement int64 (Spark LongType)
-            chunks = []
-            for i in keep:
-                a = np.asarray([c for c, _, _ in covers[i]], dtype=np.uint64)
-                chunks.append(np.stack([
-                    a.astype(np.int64),
-                    np.asarray([lv for _, lv, _ in covers[i]], dtype=np.int64),
-                    np.asarray([fl for _, _, fl in covers[i]], dtype=np.int64),
-                ], axis=1))
-            flat = np.concatenate(chunks)
-            yield pd.DataFrame({
-                "url": np.repeat(
-                    np.asarray([urls[i] for i in keep], dtype=object), counts),
-                "airspace_idx": np.repeat(
-                    np.asarray([idxs[i] for i in keep], dtype=np.int32), counts),
-                "s2_cell": flat[:, 0],
-                "s2_level": flat[:, 1].astype(np.int32),
-                "is_full": flat[:, 2].astype(bool),
-            })[cols]
-
-    return src.mapInPandas(kernel, S2_TILES_SCHEMA)
+    return tiles_map(features, S2_TILES_SCHEMA, cover)

@@ -174,6 +174,38 @@ def test_ringset_bulk_pip_matches_per_ring():
         assert (bulk[m] == expected).all(), k
 
 
+def test_usable_rings_same_from_arrow_and_sequences():
+    """The one ring decoder keeps only rings with >= 4 points that are
+    all [lon, lat] pairs, and decodes an Arrow column, nested lists and
+    2-D arrays to the same positions and coordinates."""
+    import pyarrow as pa
+
+    from openair_spark.index.pip import RING_TYPE, usable_rings
+
+    square = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+    rings = [None, square, [[0.0, 0.0], [1.0, 0.0], [0.0, 0.0]],
+             [[5.0, 5.0], [6.0, 5.0, 9.0], [6.0, 6.0], [5.0, 5.0]], [],
+             [[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 0.0]]]
+    want_pos = [1, 5]
+    as_2d = [np.asarray(r) if r and len({len(p) for p in r}) == 1 else r for r in rings]
+    for src in (rings, as_2d, pa.array(rings, RING_TYPE),
+                  pa.chunked_array([pa.array(rings[:3], RING_TYPE), pa.array(rings[3:], RING_TYPE)])):
+        pos, arrs = usable_rings(src)
+        assert pos.tolist() == want_pos
+        assert [a.tolist() for a in arrs] == [rings[i] for i in want_pos]
+    pos, arrs = usable_rings(pa.array([], RING_TYPE))
+    assert len(pos) == 0 and arrs == []
+
+
+def test_s2_cell_tokens_match_scalar_token():
+    """The Arrow token column equals cell_token per id, signed or not."""
+    rng = np.random.default_rng(3)
+    ids = rng.integers(-2**63, 2**63 - 1, 2000, dtype=np.int64)
+    ids &= ~((np.int64(1) << rng.integers(0, 62, len(ids))) - 1)  # any trailing zeros
+    ids[:3] = [0, np.int64(1) << 60, -(np.int64(1) << 62)]
+    assert s2.cell_tokens(ids).to_pylist() == [s2.cell_token(int(c)) for c in ids]
+
+
 def test_classify_cells_matches_cover_semantics():
     """classify_cells FULL cells lie inside the ring; OUTSIDE cells'
     centers are outside (PARTIAL is the boundary band)."""

@@ -478,3 +478,72 @@ def test_cover_batch_per_ring_caps():
     for lo, la in zip(rng.uniform(-9, 24, 150), rng.uniform(36, 63, 150)):
         leaf = np.uint64(np.int64(s2i.cell_id(la, lo, s2i.MAX_LEVEL)))
         assert bool(((lo_r <= leaf) & (leaf <= hi_r)).any()), (lo, la)
+
+
+_FEATURES_SCHEMA = ("url string, airspace_idx int, success boolean, "
+                    "geometry_type string, ring array<array<double>>")
+
+
+def _closed(points):
+    return [list(map(float, p)) for p in points] + [list(map(float, points[0]))]
+
+
+def test_tiles_operators_match_batch_covers(spark):
+    """polygon_tiles, h3_polygon_tiles and s2_polygon_tiles emit, as row
+    sets, exactly the batch covers of the usable rings: a FIR-sized
+    ring, one straddling +-180 and one on S2 face 4 (int64 sign bit set
+    in s2_cell). A null ring, a 3-point ring, success=false and a
+    non-Polygon geometry give no rows; an empty input gives zero rows
+    with the same schema."""
+    from openair_spark.index import h3, s2
+    from openair_spark.index.cover import cover_arrays
+    from openair_spark.ops.h3tiles import h3_cover_batch, h3_polygon_tiles
+    from openair_spark.ops.s2tiles import s2_cover_batch, s2_polygon_tiles
+    from openair_spark.ops.tiling import polygon_tiles
+
+    ang = np.linspace(0.0, np.pi, 12)
+    fir = _closed([(8.0, 47.0), (11.0, 47.0)]
+                  + [(9.5 + 1.5 * np.cos(a), 48.5 + 0.6 * np.sin(a)) for a in ang[1:-1]])
+    antimeridian = _closed([(179.5, -10.0), (180.5, -10.0), (180.5, -9.2), (179.5, -9.2)])
+    face4 = _closed([(-91.0, 10.0), (-89.5, 10.0), (-89.5, 11.2), (-91.0, 10.8)])
+    assert s2.cell_id(10.5, -90.5, 10) < 0  # face 4: sign bit set
+    good = [("u/fir", 0, fir), ("u/am", 3, antimeridian), ("u/face4", 7, face4)]
+    rows = [(u, i, True, "Polygon", r) for u, i, r in good] + [
+        ("u/null", 1, True, "Polygon", None),
+        ("u/short", 2, True, "Polygon", _closed([(1.0, 1.0), (2.0, 1.0)])),
+        ("u/failed", 4, False, "Polygon", fir),
+        ("u/line", 5, True, "LineString", fir),
+    ]
+    feats = spark.createDataFrame(rows, _FEATURES_SCHEMA)
+    rings = [np.asarray(r) for _, _, r in good]
+    keys = [(u, i) for u, i, _ in good]
+
+    owner, cells, fulls = cover_arrays(rings, 5, 9)
+    want_q = set()
+    for o, c, f in zip(owner.tolist(), cells.tolist(), fulls.tolist()):
+        res = int(quadkey.decode(c)[0])
+        west, south, east, north = (float(v) for v in quadkey.cell_bounds(c))
+        lat, lon = (south + north) / 2.0, (west + east) / 2.0
+        s2c = int(s2.cell_id(lat, lon, res + 1))
+        h3r = min(max(res, 5), 9)
+        want_q.add((*keys[o], c, res, f, s2c, s2.cell_token(s2c),
+                    int(h3.latlng_to_cell(lat, lon, h3r)), h3r))
+    got_q = {tuple(r) for r in polygon_tiles(feats).collect()}
+    assert got_q == want_q and {k[:2] for k in got_q} == set(keys)
+
+    want_h = {(*keys[o], int(c), int(r), bool(f))
+              for o, cov in enumerate(h3_cover_batch(rings, 5, 9)) for c, r, f in cov}
+    got_h = {tuple(r) for r in h3_polygon_tiles(feats).collect()}
+    assert got_h == want_h and {k[:2] for k in got_h} == set(keys)
+
+    want_s = {(*keys[o], s2.to_signed(c), lv, f)
+              for o, cov in enumerate(s2_cover_batch(rings, 10)) for c, lv, f in cov}
+    got_s = {tuple(r) for r in s2_polygon_tiles(feats).collect()}
+    assert got_s == want_s and any(r[2] < 0 for r in got_s)
+
+    empty = spark.createDataFrame([], _FEATURES_SCHEMA)
+    for op, df in ((polygon_tiles, polygon_tiles(feats)),
+                   (h3_polygon_tiles, h3_polygon_tiles(feats)),
+                   (s2_polygon_tiles, s2_polygon_tiles(feats))):
+        out = op(empty)
+        assert out.count() == 0 and out.schema == df.schema
