@@ -12,7 +12,8 @@
 `oracle_sql()`   — DuckDB-equivalent SQL for every SQL-expressible
                    entry; parse-pipeline entries are rows-only (the
                    reference fixture corpus is their oracle, checked in
-                   tests/test_core_fixtures.py).
+                   tests/test_core_fixtures.py, which runs only where
+                   that corpus exists).
 """
 
 from __future__ import annotations
@@ -46,7 +47,8 @@ def _parse_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     OpenAIR payload; the Spark rows must match field-for-field. This
     independently checks the byte-identical extraction invariant AND the
     executor parse path. Scope note: this is a smoke oracle — the full
-    census against every reference fixture is tests/test_core_fixtures."""
+    census against every reference fixture is tests/test_core_fixtures,
+    which runs only where its `FIXTURES` directory exists."""
     from openair_spark.core.parser import parse_text
     from openair_spark.spark.corpus import make_page_rows
     from openair_spark.spark.pipeline import _config_from_json, parse_features

@@ -58,11 +58,11 @@ def main() -> None:
 
     from openair_spark.ops.pip import pip_join
     from openair_spark.ops.tiling import polygon_tiles, tile_histogram
-    from openair_spark.spark.corpus import pages_df_dist
+    from openair_spark.spark.corpus import CORPUS_VERSION, pages_df_dist
     from openair_spark.spark.pipeline import parse_features
 
     # ---- corpus (cached parquet, generation excluded from timings)
-    corpus_path = f"/tmp/spark_graft_bench/pages_{sf_name}_{n_pages}"
+    corpus_path = f"/tmp/spark_graft_bench/pages_{sf_name}_{n_pages}_v{CORPUS_VERSION}"
     if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
         pages_df_dist(spark, n_pages, seed=f"bench-{sf_name}").write.mode(
             "overwrite").parquet(corpus_path)

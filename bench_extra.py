@@ -58,17 +58,17 @@ def main() -> None:
 
     from openair_spark.ops.pip import pip_join, pip_join_shuffle, polygon_cells_at_res
     from openair_spark.queries.textops import paragraph_dedup
-    from openair_spark.spark.corpus import pages_df_dist
+    from openair_spark.spark.corpus import CORPUS_VERSION, pages_df_dist
     from openair_spark.spark.pipeline import parse_features
 
-    corpus_path = f"/tmp/spark_graft_bench/pages_{sf_name}_{n_pages}"
+    corpus_path = f"/tmp/spark_graft_bench/pages_{sf_name}_{n_pages}_v{CORPUS_VERSION}"
     if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
         pages_df_dist(spark, n_pages, seed=f"bench-{sf_name}").write.mode(
             "overwrite").parquet(corpus_path)
     pages = spark.read.parquet(corpus_path)
     # keyed by corpus size (unlike bench.py's fixed path) so a 10x run
     # does not silently reuse the 8k-page feature table
-    feats_path = f"/tmp/spark_graft_bench/features_{sf_name}_{n_pages}"
+    feats_path = f"/tmp/spark_graft_bench/features_{sf_name}_{n_pages}_v{CORPUS_VERSION}"
     if not os.path.exists(os.path.join(feats_path, "_SUCCESS")):
         parse_features(pages).write.mode("overwrite").parquet(feats_path)
     feats = spark.read.parquet(feats_path)

@@ -8,7 +8,9 @@ The per-url extraction invariant is byte-identical recovery of the
 embedded OpenAIR text.
 
 Sources of OpenAIR payloads:
-  - the 43 reference fixture texts (for parity-grade pages)
+  - `PAYLOADS`: one authored v1 block per grammar path (polygon, circle,
+    DB/DA arcs in both directions, arc-first, airway, inline comments,
+    skipped tokens), held in this module
   - generated blocks from the same grammar (seeded), for volume
 
 Everything is seeded — no wall-clock, no randomness outside the seed.
@@ -19,6 +21,10 @@ from __future__ import annotations
 import hashlib
 import random
 from datetime import datetime, timedelta, timezone
+
+# Bumped whenever the rows for a given (n_pages, seed) change, so caches of
+# generated pages keyed by it are not reused across corpus changes.
+CORPUS_VERSION = 2
 
 BEGIN_SENTINEL = "-----BEGIN OPENAIR-----"
 END_SENTINEL = "-----END OPENAIR-----"
@@ -104,24 +110,149 @@ def generate_block(seed: str, version: str = "2.0") -> str:
     return "\n".join(lines)
 
 
-def _fixture_texts() -> list[tuple[str, str]]:
-    """Grammar-valid reference fixture payloads (name, text). Only
-    fixtures that parse cleanly under v1/v2 defaults are embedded in the
-    clean corpus; error fixtures are used by dedicated tests."""
-    import os
-
-    fixture_dir = "/root/reference/tests/fixtures"
-    good = [
-        "polygon.txt", "circular.txt", "arc-cw.txt", "arc-ccw.txt",
-        "arc-angle-cw.txt", "arc-angle-ccw.txt", "arc-angle-single-vx.txt",
-        "arc-cw-ccw.txt", "arc-first.txt", "airway.txt", "inline-comments.txt",
-        "skipped-tokens.txt",
-    ]
-    out = []
-    for name in good:
-        with open(os.path.join(fixture_dir, name), encoding="utf-8") as fh:
-            out.append((name, fh.read()))
-    return out
+# One authored v1 block per grammar path: polygon (DP), circle (DC), DB
+# arcs cw and ccw, DA arcs cw and ccw, two DA arcs on one V X with the
+# default direction, a cw and a ccw arc in one ring, an arc before any DP,
+# an airway (V W + DY), inline comments and skipped tokens (SP/SB/AT).
+# Written from the grammar; each parses under ParserConfig.default("1.0")
+# to one feature.
+PAYLOADS = (
+    ("polygon", "\n".join([
+        "AC D",
+        "AN CTR LAKESIDE",
+        "AH 4500ft AMSL",
+        "AL GND",
+        "DP 47:10:00 N 008:20:00 E",
+        "DP 47:15:30 N 008:31:00 E",
+        "DP 47:08:20 N 008:40:10 E",
+        "DP 47:01:45 N 008:33:30 E",
+        "DP 47:03:10 N 008:22:40 E",
+        "DP 47:10:00 N 008:20:00 E",
+    ])),
+    ("circle", "\n".join([
+        "AC R",
+        "AN R-101 RANGE",
+        "AH FL95",
+        "AL GND",
+        "V X=48:21:30 N 010:53:00 E",
+        "DC 3.5",
+    ])),
+    ("arc-cw", "\n".join([
+        "AC C",
+        "AN TMA NORTH SECTOR CW",
+        "AH FL125",
+        "AL 3500ft AMSL",
+        "DP 50:00:00 N 008:30:00 E",
+        "V D=+",
+        "V X=50:00:00 N 008:30:00 E",
+        "DB 50:05:00 N 008:30:00 E, 50:00:00 N 008:37:47 E",
+        "DP 50:00:00 N 008:30:00 E",
+    ])),
+    ("arc-ccw", "\n".join([
+        "AC C",
+        "AN TMA WEST SECTOR CCW",
+        "AH FL115",
+        "AL 2500ft AMSL",
+        "DP 49:30:00 N 006:10:00 E",
+        "V D=-",
+        "V X=49:30:00 N 006:10:00 E",
+        "DB 49:36:00 N 006:10:00 E, 49:30:00 N 006:00:45 E",
+        "DP 49:30:00 N 006:10:00 E",
+    ])),
+    ("arc-angle-cw", "\n".join([
+        "AC D",
+        "AN CTR EAST APPROACH",
+        "AH 5000ft AMSL",
+        "AL GND",
+        "DP 46:15:00 N 006:05:00 E",
+        "V D=+",
+        "V X=46:15:00 N 006:05:00 E",
+        "DA 6,30,120",
+        "DP 46:15:00 N 006:05:00 E",
+    ])),
+    ("arc-angle-ccw", "\n".join([
+        "AC D",
+        "AN CTR SOUTH APPROACH",
+        "AH 4000ft AMSL",
+        "AL GND",
+        "DP 45:40:00 N 009:15:00 E",
+        "V D=-",
+        "V X=45:40:00 N 009:15:00 E",
+        "DA 5.5,250,160",
+        "DP 45:40:00 N 009:15:00 E",
+    ])),
+    ("arc-angle-single-vx", "\n".join([
+        "AC E",
+        "AN GSEC TWIN ARCS",
+        "AH FL85",
+        "AL 1500ft AGL",
+        "DP 51:20:00 N 012:25:00 E",
+        "V X=51:20:00 N 012:25:00 E",
+        "DA 7,10,70",
+        "DA 7,110,170",
+        "DP 51:20:00 N 012:25:00 E",
+    ])),
+    ("arc-cw-ccw", "\n".join([
+        "AC C",
+        "AN TMA CRESCENT",
+        "AH FL105",
+        "AL 3000ft AMSL",
+        "V D=-",
+        "V X=48:50:00 N 002:20:00 E",
+        "DB 48:55:00 N 002:20:00 E, 48:45:00 N 002:20:00 E",
+        "V D=+",
+        "V X=48:50:00 N 002:35:13 E",
+        "DB 48:45:00 N 002:35:13 E, 48:55:00 N 002:35:13 E",
+        "DP 48:55:00 N 002:20:00 E",
+    ])),
+    ("arc-first", "\n".join([
+        "AC D",
+        "AN CTR ARC FIRST",
+        "AH 3500ft AMSL",
+        "AL GND",
+        "V D=-",
+        "V X=52:20:00 N 004:45:00 E",
+        "DB 52:24:00 N 004:45:00 E, 52:20:00 N 004:38:27 E",
+        "DP 52:20:00 N 004:45:00 E",
+        "DP 52:24:00 N 004:45:00 E",
+    ])),
+    ("airway", "\n".join([
+        "AC E",
+        "AN AWY LOWLAND CORRIDOR",
+        "AH FL145",
+        "AL FL75",
+        "V W=5",
+        "DY 50:40:00 N 007:10:00 E",
+        "DY 50:55:00 N 007:45:00 E",
+    ])),
+    ("inline-comments", "\n".join([
+        "* sector boundary revised, see chart",
+        "AC D * class delta",
+        "AN RMZ HILLTOP * radio mandatory",
+        "AH 3000ft AMSL * upper limit",
+        "AL GND",
+        "* boundary points follow",
+        "DP 47:50:00 N 011:05:00 E * north-west corner",
+        "DP 47:52:00 N 011:18:00 E",
+        "DP 47:43:30 N 011:21:00 E * south-east corner",
+        "DP 47:41:00 N 011:08:30 E",
+        "DP 47:50:00 N 011:05:00 E",
+    ])),
+    ("skipped-tokens", "\n".join([
+        "AC Q",
+        "SP 0,1,0,0,255",
+        "SB 255,255,255",
+        "AN Q-220 GLIDER AREA",
+        "AH FL65",
+        "AL 1000ft AGL",
+        "AT 46:52:00 N 007:28:00 E",
+        "DP 46:58:00 N 007:20:00 E",
+        "DP 46:57:00 N 007:36:00 E",
+        "DP 46:46:00 N 007:34:00 E",
+        "DP 46:47:00 N 007:19:00 E",
+        "DP 46:58:00 N 007:20:00 E",
+    ])),
+)
 
 
 def make_page_rows(n_pages: int, seed: str = "openair-corpus",
@@ -129,14 +260,13 @@ def make_page_rows(n_pages: int, seed: str = "openair-corpus",
                    empty_fraction: float = 0.2,
                    version: str = "2.0") -> list[dict]:
     """Deterministic page rows. ~empty_fraction pages carry no OpenAIR
-    payload; ~fixture_fraction of payload pages embed a reference fixture
-    text verbatim; the rest embed 1-3 generated blocks.
+    payload; ~fixture_fraction of payload pages embed one `PAYLOADS` text
+    verbatim; the rest embed 1-3 generated blocks.
 
     `_embedded_openair` is ground truth for the extraction-invariant
     test only; the engine never reads it."""
-    fixtures = _fixture_texts()
     return [
-        make_page_row(i, seed, fixtures, fixture_fraction, empty_fraction, version)
+        make_page_row(i, seed, fixture_fraction, empty_fraction, version)
         for i in range(n_pages)
     ]
 
@@ -152,9 +282,8 @@ def pages_df(spark, n_pages: int, seed: str = "openair-corpus", **kwargs):
     return spark.createDataFrame(rows, schema=PAGES_SCHEMA)
 
 
-def make_page_row(i: int, seed: str, fixtures: list[tuple[str, str]],
-                  fixture_fraction: float = 0.25, empty_fraction: float = 0.2,
-                  version: str = "2.0") -> dict:
+def make_page_row(i: int, seed: str, fixture_fraction: float = 0.25,
+                  empty_fraction: float = 0.2, version: str = "2.0") -> dict:
     """Row i of the corpus — independent of every other row, so
     generation distributes trivially (see pages_df_dist)."""
     rng = _rng(f"{seed}|{i}")
@@ -165,7 +294,7 @@ def make_page_row(i: int, seed: str, fixtures: list[tuple[str, str]],
     openair_text = None
     if rng.random() >= empty_fraction:
         if rng.random() < fixture_fraction:
-            openair_text = fixtures[rng.randrange(len(fixtures))][1]
+            openair_text = PAYLOADS[rng.randrange(len(PAYLOADS))][1]
         else:
             blocks = [generate_block(f"{seed}|{i}|{b}", version)
                       for b in range(rng.randint(1, 3))]
@@ -197,10 +326,9 @@ def pages_df_dist(spark, n_pages: int, seed: str = "openair-corpus",
         partitions = max(spark.sparkContext.defaultParallelism, 8)
 
     def kernel(batches):
-        fixtures = _fixture_texts()
         cols = [c.split()[0] for c in PAGES_SCHEMA.split(", ")]
         for pdf in batches:
-            rows = [make_page_row(int(i), seed, fixtures, **kwargs) for i in pdf["id"]]
+            rows = [make_page_row(int(i), seed, **kwargs) for i in pdf["id"]]
             yield pd.DataFrame(rows, columns=cols)
 
     return (

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from openair_spark.core.config import ParserConfig
 from openair_spark.core.parser import parse_text
-from openair_spark.spark.corpus import pages_df
+from openair_spark.spark.corpus import PAYLOADS, pages_df
 from openair_spark.spark.extract import extract_openair
 from openair_spark.spark.pipeline import feature_collections, parse_errors, parse_features
 from openair_spark.spark.tokenize import blocks_df, inventory_violations, order_violations, tokens_df
@@ -102,6 +102,18 @@ def test_generated_blocks_parse_under_v1(spark):
     assert rings >= 4  # every polygon ring closed with >= 4 positions
 
 
+def test_payloads_parse_under_v1():
+    """Every authored corpus payload is a clean v1 block with a closed
+    polygon ring."""
+    assert len(PAYLOADS) == 12
+    for name, text in PAYLOADS:
+        result = parse_text(text, ParserConfig.default("1.0"))
+        assert result.success, (name, result.error_message)
+        assert len(result.geojson["features"]) >= 1, name
+        ring = result.geojson["features"][0]["geometry"]["coordinates"][0]
+        assert len(ring) >= 4 and ring[0] == ring[-1], name
+
+
 def test_spark_native_validation_operators(spark):
     """order_violations / inventory_violations flag exactly the blocks
     the core validator rejects."""
@@ -130,7 +142,18 @@ def test_error_payload_surfaces_geometry(spark):
 
     from openair_spark.spark.corpus import BEGIN_SENTINEL, END_SENTINEL
 
-    text = open("/root/reference/tests/fixtures/self-intersecting.txt").read()
+    # bow-tie ring: its first and third edges cross
+    text = "\n".join([
+        "AC D",
+        "AN BOW TIE",
+        "AH FL100",
+        "AL GND",
+        "DP 45:00:00 N 006:00:00 E",
+        "DP 45:10:00 N 006:10:00 E",
+        "DP 45:00:00 N 006:10:00 E",
+        "DP 45:10:00 N 006:00:00 E",
+        "DP 45:00:00 N 006:00:00 E",
+    ])
     page_text = f"noise\n{BEGIN_SENTINEL}\n{text}\n{END_SENTINEL}\ntrailer"
     pages = spark.createDataFrame(
         [("https://x.test/a", datetime.datetime(2026, 1, 1), b"", page_text, "en")],
@@ -173,17 +196,16 @@ def test_parse_openair_files_source(spark, tmp_path):
     OpenAIR files. Every file must parse to exactly the features the
     core parser produces for that file's text (same id_seed = the file
     URI input_file_name yields)."""
-    import shutil
-
     from openair_spark.core.config import ParserConfig
     from openair_spark.core.parser import parse_text
     from openair_spark.spark.pipeline import parse_openair_files
 
     src = tmp_path / "air"
     src.mkdir()
-    names = ["polygon.txt", "circular.txt", "arc-cw.txt", "airway.txt"]
+    texts = dict(PAYLOADS)
+    names = ["polygon", "circle", "arc-cw", "airway"]
     for n in names:
-        shutil.copy(f"/root/reference/tests/fixtures/{n}", src / n)
+        (src / f"{n}.txt").write_text(texts[n], encoding="utf-8")
     feats = parse_openair_files(spark, str(src),
                                 config_json='{"version": "1.0"}').collect()
     by_url: dict = {}

@@ -79,12 +79,13 @@ def test_stateful_block_assembler_across_batches(spark, tmp_path):
     carries across batches and is removed on emit."""
     from openair_spark.core.config import ParserConfig
     from openair_spark.core.parser import parse_text
+    from openair_spark.spark.corpus import PAYLOADS
     from openair_spark.streaming.pipeline import (
         LINE_EVENTS_SCHEMA,
         stateful_block_assembler,
     )
 
-    text = open("/root/reference/tests/fixtures/polygon.txt").read()
+    text = dict(PAYLOADS)["polygon"]
     lines = text.split("\n")
     half = len(lines) // 2
     rows_a = [("u1", i, ln, False) for i, ln in enumerate(lines[:half])]

@@ -33,10 +33,12 @@ def main() -> None:
     from openair_spark.ops.h3tiles import h3_polygon_tiles
     from openair_spark.ops.tiling import polygon_tiles
     from openair_spark.queries import build_catalog
+    from openair_spark.spark.corpus import CORPUS_VERSION
     from openair_spark.spark.pipeline import parse_features
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    pages = spark.read.parquet("/tmp/spark_graft_bench/pages_sf0.1_8000")
+    pages = spark.read.parquet(
+        f"/tmp/spark_graft_bench/pages_sf0.1_8000_v{CORPUS_VERSION}")
     feats = spark.read.parquet("/tmp/spark_graft_bench/features")
     f = feats.where(F.col("success") & (F.col("geometry_type") == "Polygon"))
     polys = f.select(

@@ -55,9 +55,9 @@ spark = (SparkSession.builder.master(f"local[{cpus}]")
 spark.sparkContext.setLogLevel("ERROR")
 from openair_spark.spark.pipeline import parse_features
 from openair_spark.ops.pip import pip_join
-from openair_spark.spark.corpus import pages_df_dist
+from openair_spark.spark.corpus import CORPUS_VERSION, pages_df_dist
 
-corpus = f"/tmp/spark_graft_scaling/pages_{n_pages}"
+corpus = f"/tmp/spark_graft_scaling/pages_{n_pages}_v{CORPUS_VERSION}"
 if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
     # fixed 64-way layout: input partitioning must not depend on which
     # JVM generated the cache, or the wider level starves for tasks
