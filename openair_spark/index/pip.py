@@ -108,30 +108,46 @@ class RingSet:
         self.x1, self.y1, self.x2, self.y2 = (
             np.asarray(a, dtype=np.float64) for a in (x1, y1, x2, y2))
 
-    def contains(self, px, py, ring_idx) -> np.ndarray:
-        """Even-odd PIP for each (px[i], py[i]) against ring ring_idx[i].
+    def bboxes(self) -> np.ndarray:
+        """(4, R) inclusive bbox per ring: west, south, east, north."""
+        if not len(self.lens):
+            return np.empty((4, 0))
+        s = self.starts
+        return np.stack([np.minimum.reduceat(np.minimum(self.x1, self.x2), s),
+                         np.minimum.reduceat(np.minimum(self.y1, self.y2), s),
+                         np.maximum.reduceat(np.maximum(self.x1, self.x2), s),
+                         np.maximum.reduceat(np.maximum(self.y1, self.y2), s)])
 
-        Same half-open crossing convention as points_in_ring, one flat
-        pass over sum(ring_size) expanded pairs."""
-        px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
+    def contains(self, px, py, ring_idx) -> np.ndarray:
+        """Even-odd PIP for each (px[i], py[i]) against ring ring_idx[i]."""
         ring_idx = np.asarray(ring_idx, dtype=np.int64)
-        n = len(px)
-        if n == 0:
-            return np.zeros(0, dtype=bool)
-        lens = self.lens[ring_idx]
-        # flat edge index per expanded (row, edge) pair: row i expands to
-        # starts[ring_idx[i]] + (0 .. lens[i]-1)
-        row = np.repeat(np.arange(n), lens)
-        cum = np.cumsum(lens)
-        within = np.arange(int(cum[-1])) - np.repeat(cum - lens, lens)
-        eidx = np.repeat(self.starts[ring_idx], lens) + within
-        x1, y1, x2, y2 = self.x1[eidx], self.y1[eidx], self.x2[eidx], self.y2[eidx]
-        yp = py[row]
-        xp = px[row]
-        crosses = ((y1 <= yp) & (yp < y2)) | ((y2 <= yp) & (yp < y1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            x_at_y = x1 + (yp - y1) * (x2 - x1) / (y2 - y1)
-        hits = (crosses & (xp < x_at_y)).astype(np.int64)
-        counts = np.bincount(row, weights=hits, minlength=n)
-        return (counts.astype(np.int64) % 2).astype(bool)
+        return crossing_parity(px, py, self.starts[ring_idx], self.lens[ring_idx],
+                               self.x1, self.y1, self.x2, self.y2)
+
+
+def csr_expand(starts, lens) -> tuple[np.ndarray, np.ndarray]:
+    """(row, idx) of a CSR run list: run i expands to rows i and
+    indices starts[i] .. starts[i] + lens[i] - 1, run after run."""
+    lens = np.asarray(lens, dtype=np.int64)
+    cum = np.cumsum(lens)
+    idx = np.repeat(np.asarray(starts, dtype=np.int64) - cum + lens, lens)
+    return np.repeat(np.arange(len(lens)), lens), idx + np.arange(len(idx))
+
+
+def crossing_parity(px, py, starts, lens, x1, y1, x2, y2) -> np.ndarray:
+    """Even-odd PIP of each (px[i], py[i]) against the edge run
+    x1..y2[starts[i] : starts[i] + lens[i]] — a whole ring (RingSet) or
+    a cell's edge slice.
+
+    Same half-open crossing convention as points_in_ring, one flat pass
+    over sum(lens) expanded (row, edge) pairs."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    row, eidx = csr_expand(starts, lens)
+    ex1, ey1, ex2, ey2 = x1[eidx], y1[eidx], x2[eidx], y2[eidx]
+    yp = py[row]
+    crosses = ((ey1 <= yp) & (yp < ey2)) | ((ey2 <= yp) & (yp < ey1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        x_at_y = ex1 + (yp - ey1) * (ex2 - ex1) / (ey2 - ey1)
+    hits = crosses & (px[row] < x_at_y)
+    return np.bincount(row[hits], minlength=len(px)) % 2 == 1

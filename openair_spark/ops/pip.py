@@ -2,78 +2,54 @@
 
 Plan shape (for 10^12 points x ~10^5 polygons):
 
-  polygons --one setup--> cover index rows + ring edges
-      cover_index: (polygon_idx, cell, is_full, bbox)   [small: broadcast]
-      RingSet: CSR ring edges                           [broadcast variable]
+  polygons --one setup--> cover rows (polygon_idx, cell, is_full) + ring edges
       (a DataFrame's setup runs on executors in one pass; a driver-side
       list runs the same setup in the driver)
-  points  --map--> cell = quadkey(point, res per cover row's res range)
-  join    points x broadcast(cell_index) on cell  [NO shuffle]
-  exact   is_full rows skip PIP; partial rows run the vectorized
-          ray-cast in one Arrow-batched kernel, keyed by the int
-          polygon_idx; a broadcast dim join restores polygon_id
+  driver   ProbeIndex: sorted int64 cell keys with CSR postings of
+           (polygon_idx, is_full), per-polygon bbox, the RingSet and
+           the ids as an Arrow string array   [one broadcast variable]
+  points   --one mapInArrow--> each point's cells at the resolutions
+           the index uses (quadkey.cell_id, bit-equal to the SQL
+           expression), searchsorted probe, inclusive bbox test, FULL
+           postings pass, PARTIAL ones run the crossing parity; the
+           batch's rows are emitted with polygon_id by Arrow take
+                                                  [NO join, NO shuffle]
 
-ops/raster.py::assign_tiles uses the same setup and int key at one
-resolution.
+ops/raster.py::assign_tiles runs the same probe over tiles at one
+resolution, testing the tile centre.
 
-Skew: a broadcast join has no shuffle skew, but a hot *cell* (dense
-megacity airspace) still concentrates exact-PIP work in whichever tasks
-scan those points. Because candidate work is per-point-row and the scan
-partitioning is independent of cell, hot cells are already spread across
-input partitions — the residual skew knob is `salt` for the shuffle-join
-variant (`pip_join_shuffle`), which repartitions by (cell, salt) with
-the polygon side replicated per salt. Mega-polygons are split by the
-compact cover itself (bounded cells per row).
+Skew: the broadcast plan has no shuffle; hot cells are spread over the
+point scan's partitions. The shuffle variant (`pip_join_shuffle`, for
+polygon sides too big to broadcast) repartitions points by (cell, salt)
+with the polygon cells replicated per salt, and every PARTIAL cell
+carries only the edges a point in it can cross, so a mega-polygon's
+exact work spreads over its boundary cells.
 """
 
 from __future__ import annotations
 
-import json
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..index import quadkey
-from ..index.cover import cover_arrays
-from ..index.pip import RingSet, points_in_ring, ring_edges, usable_rings
+from ..index.cover import _PAIR_BUDGET, cover_arrays
+from ..index.pip import RingSet, crossing_parity, csr_expand, ring_edges, usable_rings
 
 # Cover band for the PIP probe index. min 7 (not the tile mandate's 5):
-# every cover resolution the index USES adds one exploded probe row PER
-# POINT, so a few coarse res-5/6 FULL cells taxed every point with two
-# extra probe rows (10M instead of 6M for 2M points on the bench
-# corpus). At min 7 polygon interiors compact to res-7 FULL cells
-# instead — same is_full ray-cast skip — up to the per-ring cell cap;
-# measured: identical index size at the 10x corpus (401,112 vs 401,116
-# rows), small consistent win at sf0.1. Hit sets identical either way —
-# the cover res band is an internal knob of the candidate join, not
-# part of the result.
+# every cover resolution the index USES adds one probe per point, so a
+# few coarse res-5/6 FULL cells taxed every point with two extra probes
+# (10M instead of 6M for 2M points on the bench corpus). At min 7
+# polygon interiors compact to res-7 FULL cells instead — same is_full
+# ray-cast skip — up to the per-ring cell cap; measured: identical index
+# size at the 10x corpus (401,112 vs 401,116 rows), small consistent win
+# at sf0.1. Hit sets identical either way — the cover res band is an
+# internal knob of the candidate probe, not part of the result.
 MIN_RES = 7
 MAX_RES = 9
-
-
-def cover_index(rings: list[np.ndarray], min_res: int, max_res: int) -> dict:
-    """The polygon cover index: flat arrays (owner, cell, is_full, west,
-    south, east, north), one entry per compact-cover cell of rings[owner]
-    in [min_res, max_res], with its ring's bbox. The bbox lets a join
-    prefilter candidates JVM-side before the exact-PIP kernel."""
-    owner, cell, is_full = cover_arrays(rings, min_res=min_res, max_res=max_res)
-    bbox = np.asarray([(r[:, 0].min(), r[:, 1].min(), r[:, 0].max(), r[:, 1].max())
-                       for r in rings], dtype=np.float64).reshape(-1, 4)[owner]
-    return {"owner": owner, "cell": cell, "is_full": is_full, "west": bbox[:, 0],
-            "south": bbox[:, 1], "east": bbox[:, 2], "north": bbox[:, 3]}
-
-
-def _point_cells_expr(lat_col: str, lon_col: str, cover_resolutions: list[int]):
-    """Array of the point's cell ids at every resolution the cover uses —
-    pure Spark SQL so the join key computation stays JVM-side."""
-    return F.array(*[
-        F.expr(quadkey.sql_cell_expr(lat_col, lon_col, res))
-        for res in cover_resolutions
-    ])
-
 
 _SETUP_SCHEMA = ("polygon_id string, kind int, a long, b int, "
                  "x1 double, y1 double, x2 double, y2 double")
@@ -81,31 +57,30 @@ _SETUP_SCHEMA = ("polygon_id string, kind int, a long, b int, "
 
 def _setup_rows(polygons: pd.DataFrame, min_res: int, max_res: int) -> pd.DataFrame:
     """polygons(polygon_id, ring) -> both broadcast-route inputs as one
-    frame: cover index rows (kind=0: a=cell, b=is_full, x1..y2=bbox) and
-    ring edge rows (kind=1: a=edge_idx, x1,y1,x2,y2=edge)."""
+    frame: cover rows (kind=0: a=cell, b=is_full) and ring edge rows
+    (kind=1: a=edge_idx, x1,y1,x2,y2=edge)."""
     pos, arrs = usable_rings(polygons["ring"])
-    ix = cover_index(arrs, min_res, max_res)
+    owner, cell, is_full = cover_arrays(arrs, min_res=min_res, max_res=max_res)
     lens, ex1, ey1, ex2, ey2 = ring_edges(arrs)
     eowner = np.repeat(np.arange(len(arrs)), lens)
     edge_idx = np.arange(len(eowner)) - np.repeat(np.cumsum(lens) - lens, lens)
     ids = polygons["polygon_id"].to_numpy()[pos]
-    n_cov, n_edge = len(ix["cell"]), len(eowner)
+    n_cov, n_edge = len(cell), len(eowner)
+    pad = np.zeros(n_cov)
     return pd.DataFrame({
-        "polygon_id": np.concatenate([ids[ix["owner"]], ids[eowner]]),
+        "polygon_id": np.concatenate([ids[owner], ids[eowner]]),
         "kind": np.repeat(np.array([0, 1], dtype=np.int32), [n_cov, n_edge]),
-        "a": np.concatenate([ix["cell"], edge_idx]),
-        "b": np.concatenate([ix["is_full"], np.zeros(n_edge, dtype=bool)]).astype(np.int32),
-        "x1": np.concatenate([ix["west"], ex1]),
-        "y1": np.concatenate([ix["south"], ey1]),
-        "x2": np.concatenate([ix["east"], ex2]),
-        "y2": np.concatenate([ix["north"], ey2]),
+        "a": np.concatenate([cell, edge_idx]),
+        "b": np.concatenate([is_full, np.zeros(n_edge, dtype=bool)]).astype(np.int32),
+        "x1": np.concatenate([pad, ex1]), "y1": np.concatenate([pad, ey1]),
+        "x2": np.concatenate([pad, ex2]), "y2": np.concatenate([pad, ey2]),
     })
 
 
 def _polygon_setup(polygons: DataFrame, min_res: int, max_res: int) -> DataFrame:
     """_setup_rows as one executor pass over a polygon DataFrame: the
     ring set never crosses the driver as nested lists, and one scan
-    yields both the edges and the cover index."""
+    yields both the edges and the cover rows."""
     return polygons.select("polygon_id", "ring").mapInPandas(
         lambda batches: (_setup_rows(pdf, min_res, max_res) for pdf in batches),
         _SETUP_SCHEMA)
@@ -113,8 +88,8 @@ def _polygon_setup(polygons: DataFrame, min_res: int, max_res: int) -> DataFrame
 
 def _split_setup(pdf: pd.DataFrame) -> tuple[RingSet, pd.DataFrame]:
     """Driver-side split of the setup rows into the RingSet (one ring
-    per polygon_id, edges in order) and the cover index frame keyed by
-    the RingSet's int polygon_idx."""
+    per polygon_id, edges in order) and the cover frame keyed by the
+    RingSet's int polygon_idx."""
     edges = pdf[pdf["kind"] == 1].sort_values(["polygon_id", "a"], kind="stable")
     pid = edges["polygon_id"].to_numpy()
     starts = np.flatnonzero(np.r_[len(pid) > 0, pid[1:] != pid[:-1]])
@@ -125,8 +100,6 @@ def _split_setup(pdf: pd.DataFrame) -> tuple[RingSet, pd.DataFrame]:
         "cell": cov["a"].to_numpy(dtype=np.int64),
         "polygon_idx": cov["polygon_id"].map(rs.idx_of).to_numpy(dtype=np.int32),
         "is_full": cov["b"].to_numpy(dtype=bool),
-        "west": cov["x1"].to_numpy(), "south": cov["y1"].to_numpy(),
-        "east": cov["x2"].to_numpy(), "north": cov["y2"].to_numpy(),
     })
     return rs, index_pdf
 
@@ -138,25 +111,69 @@ def list_setup(polygons: list[dict], min_res: int, max_res: int
         pd.DataFrame(polygons, columns=["polygon_id", "ring"]), min_res, max_res))
 
 
-def broadcast_sides(spark: SparkSession, ring_set: RingSet, index_pdf: pd.DataFrame):
-    """(rings broadcast, index DataFrame, polygon_idx -> polygon_id dim).
+class ProbeIndex:
+    """The whole broadcast side of pip_join and assign_tiles, shipped
+    once as one broadcast variable (unpickled once per Python worker).
 
-    The hot path carries an int polygon_idx, never the id string: Arrow
-    string columns dominate kernel-stage CPU (JVM serialize + python
-    object materialization) and anti-scale under local-mode core
-    contention; the id is restored by a broadcast dim join on the
-    (small) hit set afterwards. Rings travel ONCE as a broadcast
-    variable (unpickled once per python worker, reused across tasks).
-    The index is broadcast-scale by contract, so holding it driver-side
-    costs no more than the broadcast build itself — and a LocalRelation
-    never re-executes upstream and leaves nothing cached to leak."""
-    rings_b = spark.sparkContext.broadcast(ring_set)
-    index_df = spark.createDataFrame(
-        index_pdf, "cell long, polygon_idx int, is_full boolean, "
-                   "west double, south double, east double, north double")
-    dim = spark.createDataFrame(list(enumerate(ring_set.ids)),
-                                "polygon_idx int, polygon_id string")
-    return rings_b, index_df, dim
+    Cover cells are sorted int64 keys with CSR postings of (polygon_idx,
+    is_full), probed by searchsorted: a sorted-array probe holds the
+    index in flat arrays at a log-time lookup, the memory side of the
+    sorted-vs-hash trade-off. The hot path carries the int polygon_idx;
+    the id string is only materialized for hits, by Arrow take."""
+
+    def __init__(self, rs: RingSet, index_pdf: pd.DataFrame):
+        cell = index_pdf["cell"].to_numpy(dtype=np.int64)
+        order = np.argsort(cell, kind="stable")
+        self.keys, first = np.unique(cell[order], return_index=True)
+        self.offsets = np.r_[first, len(cell)].astype(np.int64)
+        self.poly = index_pdf["polygon_idx"].to_numpy(dtype=np.int64)[order]
+        self.full = index_pdf["is_full"].to_numpy(dtype=bool)[order]
+        self.resolutions = sorted({int(r) for r in self.keys >> quadkey._RES_SHIFT})
+        self.rs, self.bbox = rs, rs.bboxes()
+        self.ids = pa.array(rs.ids, pa.string())
+
+    def hits(self, keys, rows, px, py, box: bool = True):
+        """(rows, polygon_idx) of every hit: rows[i]'s probe key keys[i]
+        matched a posting and its point (px, py)[rows[i]] passes the
+        posting — FULL, or inside by crossing parity. box applies the
+        inclusive polygon bbox test before both."""
+        empty = np.zeros(0, dtype=np.int64)
+        if not len(self.keys) or not len(keys):
+            return empty, empty
+        pos = np.minimum(np.searchsorted(self.keys, keys), len(self.keys) - 1)
+        found = self.keys[pos] == keys
+        pos = pos[found]
+        i, post = csr_expand(self.offsets[pos], self.offsets[pos + 1] - self.offsets[pos])
+        rows, poly = rows[found][i], self.poly[post]
+        x, y = px[rows], py[rows]
+        if box:
+            west, south, east, north = self.bbox[:, poly]
+            inb = np.flatnonzero((x >= west) & (x <= east) & (y >= south) & (y <= north))
+            rows, poly, post, x, y = rows[inb], poly[inb], post[inb], x[inb], y[inb]
+        keep = self.full[post].copy()
+        part = np.flatnonzero(~keep)
+        keep[part] = self.rs.contains(x[part], y[part], poly[part])
+        return rows[keep], poly[keep]
+
+
+def probe_join(df: DataFrame, index: ProbeIndex, probe, box: bool = True) -> DataFrame:
+    """df's rows + polygon_id for every hit of `index`, in one
+    mapInArrow. probe(record_batch, resolutions) -> (keys, rows, px, py)
+    gives each row's probe keys and test point."""
+    index_b = df.sparkSession.sparkContext.broadcast(index)
+    names = df.schema.fieldNames() + ["polygon_id"]
+
+    def kernel(batches):
+        ix: ProbeIndex = index_b.value
+        for rb in batches:
+            rows, poly = ix.hits(*probe(rb, ix.resolutions), box=box)
+            if len(rows):
+                yield pa.RecordBatch.from_arrays(
+                    rb.take(pa.array(rows)).columns + [ix.ids.take(pa.array(poly))],
+                    names=names)
+
+    return df.mapInArrow(kernel, StructType(
+        df.schema.fields + [StructField("polygon_id", StringType())]))
 
 
 # routing decision of the most recent pip_join call ("broadcast" |
@@ -184,12 +201,13 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
     Routing: a DataFrame polygon side is sized first (one cheap edge-sum
     aggregate that also fills the persist). At or under
     `max_broadcast_edges` total edges the broadcast plan runs (cover
-    computed executor-side, rings travel once as a broadcast variable,
-    NO shuffle); above it the salted shuffle plan (`pip_join_shuffle`)
-    runs instead — the polygon side never materializes on the driver.
-    Both produce identical (point, polygon_id) hit sets."""
+    computed executor-side, one ProbeIndex broadcast, one point-side
+    mapInArrow, NO shuffle); above it the salted shuffle plan
+    (`pip_join_shuffle`) runs instead — the polygon side never
+    materializes on the driver. Both produce identical (point,
+    polygon_id) hit sets. Points with a null or NaN coordinate get no
+    hits."""
     global LAST_ROUTE
-    spark = points.sparkSession
 
     # Materialize the polygon side ONCE. The upstream plan may be an
     # expensive Arrow parse (pages -> features); without a persist, the
@@ -206,101 +224,104 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
                                     lat_col=lat_col, lon_col=lon_col, res=7)
             polys_persisted.unpersist()
             return hits.drop("cell")
-        ring_set, index_pdf = _split_setup(
-            _polygon_setup(polys_persisted, min_res, max_res).toPandas())
+        setup = _split_setup(_polygon_setup(polys_persisted, min_res, max_res).toPandas())
         polys_persisted.unpersist()
     else:
-        ring_set, index_pdf = list_setup(polygons, min_res, max_res)
+        setup = list_setup(polygons, min_res, max_res)
     LAST_ROUTE = "broadcast"
-    rings_b, index_small, dim = broadcast_sides(spark, ring_set, index_pdf)
 
-    # probe only resolutions the cover actually uses: small polygons
-    # put every cover leaf at max_res, so blindly exploding each point
-    # to all res levels multiplies the probe row count for nothing
-    resolutions = sorted(
-        int(r) for r in
-        np.unique(index_pdf["cell"].to_numpy(dtype=np.int64) >> quadkey._RES_SHIFT)
-    ) or list(range(min_res, max_res + 1))
+    def point_probe(rb, resolutions):
+        lon, lat = (np.asarray(rb.column(c).to_numpy(zero_copy_only=False), dtype=np.float64)
+                    for c in (lon_col, lat_col))
+        ok = np.flatnonzero(~(np.isnan(lon) | np.isnan(lat)))
+        keys = [quadkey.cell_id(lat[ok], lon[ok], r) for r in resolutions]
+        return np.concatenate([ok[:0], *keys]), np.tile(ok, len(resolutions)), lon, lat
 
-    pts = points.withColumn(
-        "_cells", _point_cells_expr(lat_col, lon_col, resolutions)
-    ).withColumn("cell", F.explode("_cells")).drop("_cells")
+    return probe_join(points, ProbeIndex(*setup), point_probe)
 
-    # ONE scan: FULL-cover hits pass through the same kernel untested
-    # (no union of two branches — a union here re-executes the whole
-    # upstream parse/index/join per branch, Catalyst does not reuse the
-    # exchange across mapInPandas subplans)
-    candidates = (
-        pts.join(F.broadcast(index_small), "cell", "inner")
-        # bbox prefilter (JVM, inclusive = safe superset of the ray-cast):
-        # drops cell-sharing candidates outside the polygon's bbox before
-        # they cross into the Python kernel
-        .where((F.col(lon_col) >= F.col("west")) & (F.col(lon_col) <= F.col("east"))
-               & (F.col(lat_col) >= F.col("south")) & (F.col(lat_col) <= F.col("north")))
-        .drop("cell", "west", "south", "east", "north")
-    )
 
-    out_fields = [n for n in candidates.schema.fieldNames() if n != "is_full"]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in candidates.schema.fields if f.name in out_fields
-    )
+# Slack on a slice's cell bounds, in degrees: a point's floor-computed
+# cell and the crossing abscissa x_at_y can each be off by an ulp
+# (~1e-13 deg at |x| <= 360), so an edge within the slack is kept.
+_SLICE_SLACK = 1e-9
 
-    # mapInArrow, not mapInPandas: at millions of candidate rows the
-    # pandas DataFrame materialization (index + block manager + object
-    # boxing) on both sides of the boundary was ~half the kernel-stage
-    # cost; Arrow batches expose the numeric columns as zero-copy numpy
-    # views and the survivor filter runs as one C++ compute kernel.
-    def exact_kernel(batches):
-        import pyarrow as pa
 
-        rs: RingSet = rings_b.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            keep = cols["is_full"].to_numpy(zero_copy_only=False).astype(
-                bool, copy=True)
-            part = np.flatnonzero(~keep)
-            if len(part):
-                ridx = cols["polygon_idx"].to_numpy().astype(np.int64)[part]
-                keep[part] = rs.contains(
-                    cols[lon_col].to_numpy(zero_copy_only=False)[part],
-                    cols[lat_col].to_numpy(zero_copy_only=False)[part], ridx)
-            flt = rb.filter(pa.array(keep))
-            yield pa.RecordBatch.from_arrays(
-                [flt.column(flt.schema.get_field_index(n)) for n in out_fields],
-                names=out_fields)
+def edge_slices(rs: RingSet, owner, cell) -> tuple[np.ndarray, np.ndarray]:
+    """(counts, edge_idx): for each cover cell cell[i] of ring owner[i],
+    the indices into rs's edge arrays of the edges a point in that cell
+    can cross, cell after cell.
 
-    hits = candidates.mapInArrow(exact_kernel, schema)
-    return hits.join(F.broadcast(dim), "polygon_idx").drop("polygon_idx")
+    The half-open crossing test counts an edge only if the point's y is
+    in the edge's y-range (so a horizontal edge never counts) and the
+    point's x is below the edge's crossing abscissa, which is at most
+    the edge's max x. So an edge whose y-range misses the cell's
+    latitude span, or whose max x is west of the cell, cannot cross the
+    ray of any point in the cell, and parity over the slice equals
+    parity over the whole ring. Cells on the grid's outer rows and
+    column take points clamped from outside [-90, 90] x [-180, ...], so
+    their spans are open on that side."""
+    owner = np.asarray(owner, dtype=np.int64)
+    cell = np.asarray(cell, dtype=np.int64)
+    res, nx, ny = quadkey.decode(cell)
+    west, south, _, north = quadkey.cell_bounds(cell)
+    top = (np.int64(1) << res) - 1
+    west = np.where(nx == 0, -np.inf, west - _SLICE_SLACK)
+    south = np.where(ny == 0, -np.inf, south - _SLICE_SLACK)
+    north = np.where(ny == top, np.inf, north + _SLICE_SLACK)
+    ymin, ymax = np.minimum(rs.y1, rs.y2), np.maximum(rs.y1, rs.y2)
+    xmax = np.maximum(rs.x1, rs.x2)
+    lens = rs.lens[owner]
+    cum = np.cumsum(lens)
+    cells, edges = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
+    start = 0
+    while start < len(cell):
+        stop = max(start + 1, int(np.searchsorted(cum, cum[start] - lens[start] + _PAIR_BUDGET,
+                                                  side="right")))
+        ci, e = csr_expand(rs.starts[owner[start:stop]], lens[start:stop])
+        ci += start
+        keep = ((ymin[e] < ymax[e]) & (ymax[e] >= south[ci]) & (ymin[e] <= north[ci])
+                & (xmax[e] >= west[ci]))
+        cells.append(ci[keep])
+        edges.append(e[keep])
+        start = stop
+    return np.bincount(np.concatenate(cells), minlength=len(cell)), np.concatenate(edges)
+
+
+_CELLS_COLS = ["cell", "polygon_id", "is_full", "west", "south", "east", "north", "edges"]
+_CELLS_SCHEMA = ("cell long, polygon_id string, is_full boolean, west double, "
+                 "south double, east double, north double, edges array<double>")
 
 
 def polygon_cells_at_res(polygons: DataFrame, res: int = 7) -> DataFrame:
     """Executor-parallel shuffle-join input: polygons(polygon_id, ring)
-    -> (cell, polygon_id, is_full, west..north bbox, ring_json): the
-    cover_index pinned to min=max=res, so every intersecting res-`res`
-    cell gets one row. The ring travels as JSON so the shuffle variant
-    can evaluate the exact test without any driver-side or broadcast
-    ring materialization; is_full and the bbox let pip_join_shuffle
-    skip the exact test for interior cells and prefilter candidates
-    JVM-side."""
+    -> (cell, polygon_id, is_full, west..north ring bbox, edges): the
+    cover pinned to min=max=res, so every intersecting res-`res` cell
+    gets one row. A PARTIAL row's `edges` is its cell's edge slice
+    (edge_slices), flattened as (x1, y1, x2, y2) per edge, so the
+    shuffle route tests a candidate against its own cell's slice with
+    no ring materialized anywhere; a FULL row's is empty."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pos, arrs = usable_rings(pdf["ring"])
-            ix = cover_index(arrs, res, res)
-            owner = ix.pop("owner")
-            ring_json = np.asarray([json.dumps(a.tolist()) for a in arrs], dtype=object)
-            yield pd.DataFrame({
-                "cell": ix.pop("cell"),
-                "polygon_id": pdf["polygon_id"].to_numpy()[pos][owner],
-                **ix, "ring_json": ring_json[owner]})
+    def kernel(batches):
+        for rb in batches:
+            pos, arrs = usable_rings(rb.column("ring"))
+            owner, cell, is_full = cover_arrays(arrs, min_res=res, max_res=res)
+            rs = RingSet.from_edges(range(len(arrs)), *ring_edges(arrs))
+            part = np.flatnonzero(~is_full)
+            counts, eidx = edge_slices(rs, owner[part], cell[part])
+            lens = np.zeros(len(cell), dtype=np.int64)
+            lens[part] = 4 * counts
+            flat = np.stack([rs.x1[eidx], rs.y1[eidx], rs.x2[eidx], rs.y2[eidx]], axis=1)
+            edges = pa.ListArray.from_arrays(
+                pa.array(np.r_[0, np.cumsum(lens)].astype(np.int32)),
+                pa.array(flat.ravel(), pa.float64()))
+            bbox = rs.bboxes()[:, owner]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cell, pa.int64()),
+                 rb.column("polygon_id").take(pa.array(pos[owner], pa.int64())),
+                 pa.array(is_full, pa.bool_()), *(pa.array(b, pa.float64()) for b in bbox),
+                 edges], names=_CELLS_COLS)
 
-    return polygons.select("polygon_id", "ring").mapInPandas(
-        kernel, "cell long, polygon_id string, is_full boolean, "
-                "west double, south double, east double, north double, "
-                "ring_json string")
+    return polygons.select("polygon_id", "ring").mapInArrow(kernel, _CELLS_SCHEMA)
 
 
 def auto_salt(polygon_cells: DataFrame, cap: int = 32) -> int:
@@ -322,53 +343,38 @@ def auto_salt(polygon_cells: DataFrame, cap: int = 32) -> int:
 def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
                      salt: int | None = None, lat_col: str = "lat", lon_col: str = "lon",
                      res: int = 7) -> DataFrame:
-    """Shuffle-join variant for polygon sets too big to broadcast.
+    """Shuffle-join variant for polygon sets too big to broadcast:
+    returns (cell, points columns, polygon_id) per hit.
 
     polygon_cells: polygon_cells_at_res output, (cell, polygon_id,
-    is_full, west, south, east, north, ring_json).
+    is_full, west, south, east, north, edges).
 
-    Round-6 plan (guide §8: decide on light rows, move heavy bytes
-    once). The round-5 shape attached ring_json to EVERY candidate row
-    of the cell join, so each ring's multi-KB JSON crossed the shuffle
-    and the Arrow boundary once per cell-sharing point — tens of GB at
-    2M points — and every candidate (even interior FULL-cell hits) paid
-    a ray cast. Now:
-
-      1. The cell equi-join carries only (cell, polygon_id, is_full,
-         bbox) — ~50 B/row; the polygon side is replicated over `salt`
-         buckets so hot cells spread across reducers (north rule).
-      2. Candidates outside the polygon bbox drop JVM-side; candidates
-         in FULL cover cells bypass the exact test entirely.
-      3. Only surviving PARTIAL candidates shuffle again — by
-         polygon_id — and meet their ring in a COGROUP, so each ring's
-         JSON crosses the network once per polygon (not per candidate)
-         and is parsed once per group.
+    One exchange: points repartition by (cell, salt) and meet the
+    polygon cells — replicated over `salt` buckets so hot cells spread
+    across reducers (north rule) — in an equi-join on (cell, salt).
+    Candidates outside the polygon bbox drop JVM-side; one mapInArrow
+    then passes FULL-cell candidates and runs the crossing parity of
+    PARTIAL ones over the edge slice their row carries. Per-row work is
+    bounded by the slice, so a mega-polygon's exact work spreads over
+    its boundary cells instead of landing in one task.
 
     Hit sets are identical to the broadcast route (asserted by
-    tests/test_ops.py); the exchanges under both output branches are
-    shared via Spark's exchange reuse.
+    tests/test_ops.py).
 
     salt=None (default) derives the count from the cell histogram
     (auto_salt); pass an int to pin it.
 
     polygon_cells is materialized once up front (GC-scoped local
-    checkpoint): auto_salt and the plan's three scans of it would
-    otherwise each re-run its cover kernel.
+    checkpoint): auto_salt and the join would otherwise each re-run its
+    cover kernel.
     """
     polygon_cells = polygon_cells.localCheckpoint(eager=True)
     if salt is None:
         salt = auto_salt(polygon_cells)
-    cells_meta = polygon_cells.select(
-        "cell", "polygon_id", "is_full", "west", "south", "east", "north")
-    # the rings side re-reads the same input as cells_meta; rename its
-    # key so the cogroup below is not an ambiguous self-join
-    rings_tbl = polygon_cells.select(
-        F.col("polygon_id").alias("_ring_pid"), "ring_json") \
-        .dropDuplicates(["_ring_pid"])
 
     pts = points.withColumn("cell", F.expr(quadkey.sql_cell_expr(lat_col, lon_col, res)))
     pts = pts.withColumn("_salt", F.pmod(F.hash(lon_col, lat_col), F.lit(salt)))
-    replicated = cells_meta.withColumn(
+    replicated = polygon_cells.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
     candidates = pts.repartition("cell", "_salt").join(
@@ -377,28 +383,23 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
         (F.col(lon_col) >= F.col("west")) & (F.col(lon_col) <= F.col("east"))
         & (F.col(lat_col) >= F.col("south")) & (F.col(lat_col) <= F.col("north"))
     ).drop("west", "south", "east", "north")
+    out = StructType([f for f in candidates.schema.fields
+                      if f.name not in ("is_full", "edges")])
 
-    out_names = [n for n in candidates.schema.fieldNames() if n != "is_full"]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in candidates.schema.fields if f.name in out_names)
+    def exact_kernel(batches):
+        for rb in batches:
+            keep = rb.column("is_full").to_numpy(zero_copy_only=False).copy()
+            part = np.flatnonzero(~keep)
+            if len(part):
+                edges = rb.column("edges")
+                off = edges.offsets.to_numpy() // 4
+                x1, y1, x2, y2 = edges.values.to_numpy().reshape(-1, 4).T
+                keep[part] = crossing_parity(
+                    *(rb.column(c).to_numpy(zero_copy_only=False)[part]
+                      for c in (lon_col, lat_col)),
+                    off[part], (off[1:] - off[:-1])[part], x1, y1, x2, y2)
+            flt = rb.filter(pa.array(keep))
+            yield pa.RecordBatch.from_arrays(
+                [flt.column(f.name) for f in out.fields], names=out.fieldNames())
 
-    full_hits = candidates.where(F.col("is_full")).drop("is_full")
-    partial = candidates.where(~F.col("is_full")).drop("is_full")
-
-    def exact_cogroup(key, cand: pd.DataFrame, ring_pdf: pd.DataFrame
-                      ) -> pd.DataFrame:
-        if len(cand) == 0 or len(ring_pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        ring = np.asarray(json.loads(ring_pdf["ring_json"].iloc[0]),
-                          dtype=np.float64)
-        keep = points_in_ring(cand[lon_col].to_numpy(),
-                              cand[lat_col].to_numpy(), ring)
-        return cand.loc[keep, out_names]
-
-    exact_hits = (
-        partial.groupBy("polygon_id")
-        .cogroup(rings_tbl.groupBy("_ring_pid"))
-        .applyInPandas(exact_cogroup, schema)
-    )
-    return full_hits.select(*out_names).unionByName(exact_hits)
+    return candidates.mapInArrow(exact_kernel, out)

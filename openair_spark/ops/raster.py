@@ -1,8 +1,9 @@
 """Raster-tile <-> vector-polygon assignment (north rule).
 
 A raster layer is modeled as a regular grid: tile = quadkey cell at a
-fixed resolution with a value column. Assignment joins tiles to polygons
-through the polygon cover (JVM broadcast join on cell) and resolves
+fixed resolution with a value column. Assignment probes each tile id in
+the polygon cover built at the tile resolution (ops/pip.py's broadcast
+ProbeIndex, one mapInArrow over the tiles, no join) and resolves
 PARTIAL cells by testing the tile *center* against the ring (standard
 center-point rasterization rule — deterministic and oracle-expressible
 for rectangles).
@@ -13,15 +14,12 @@ partial+final handled by Spark).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index import quadkey
-from .pip import broadcast_sides, list_setup
+from .pip import ProbeIndex, list_setup, probe_join
 
 
 def tiles_from_points(points: DataFrame, res: int,
@@ -43,39 +41,20 @@ def assign_tiles(tiles: DataFrame, polygons: list[dict], res: int,
     """tiles(tile, ...) x polygons -> (tile rows, polygon_id).
 
     The polygon cover is built at exactly the tile resolution (the
-    pip_join setup at min_res = max_res = res) so the join key is the
+    pip_join setup at min_res = max_res = res) so the probe key is the
     tile id itself; FULL cover cells assign directly, PARTIAL cells test
-    the tile center in the kernel. The kernel carries the int
-    polygon_idx; a broadcast dim join restores polygon_id.
+    the tile center. A null tile gets no polygon.
     """
-    rings_b, index_df, dim = broadcast_sides(
-        tiles.sparkSession, *list_setup(polygons, res, res))
-    index_df = index_df.drop("west", "south", "east", "north")
 
-    cand = tiles.join(F.broadcast(index_df), tiles[tile_col] == index_df.cell, "inner").drop("cell")
-    out_fields = [f for f in cand.schema.fields if f.name != "is_full"]
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
-    names = [f.name for f in out_fields]
+    def tile_probe(rb, _resolutions):
+        tile = rb.column(tile_col)
+        keys = tile.fill_null(0).to_numpy()
+        rows = np.flatnonzero(tile.is_valid().to_numpy(zero_copy_only=False))
+        west, south, east, north = quadkey.cell_bounds(keys)
+        return keys[rows], rows, (west + east) / 2.0, (south + north) / 2.0
 
-    def center_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rs = rings_b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            keep = pdf["is_full"].to_numpy(dtype=bool).copy()
-            part = np.flatnonzero(~keep)
-            if len(part):
-                cells = pdf[tile_col].to_numpy()[part]
-                west, south, east, north = quadkey.cell_bounds(cells)
-                cx = (np.asarray(west) + np.asarray(east)) / 2.0
-                cy = (np.asarray(south) + np.asarray(north)) / 2.0
-                ridx = pdf["polygon_idx"].to_numpy(dtype=np.int64)[part]
-                keep[part] = rs.contains(cx, cy, ridx)
-            yield pdf.loc[keep, names]
-
-    hits = cand.mapInPandas(center_kernel, schema)
-    return hits.join(F.broadcast(dim), "polygon_idx").drop("polygon_idx")
+    return probe_join(tiles, ProbeIndex(*list_setup(polygons, res, res)), tile_probe,
+                      box=False)
 
 
 def zonal_stats(assigned: DataFrame, value_col: str = "tile_value") -> DataFrame:

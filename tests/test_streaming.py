@@ -105,12 +105,21 @@ def test_stateful_block_assembler_across_batches(spark, tmp_path):
     stream = (spark.readStream.schema(LINE_EVENTS_SCHEMA)
               .option("maxFilesPerTrigger", 1).parquet(src))
     cfg = '{"version": "1.0"}'
-    q = (stateful_block_assembler(stream, config_json=cfg)
-         .writeStream.outputMode("append")
-         .format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
+    # a processing-time timeout asks for a no-data batch after every
+    # batch, so with no-data batches on the availableNow query never
+    # ends and processAllAvailable never returns
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(no_data, "false")
+    try:
+        q = (stateful_block_assembler(stream, config_json=cfg)
+             .writeStream.outputMode("append")
+             .format("parquet").option("path", out)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.processAllAvailable()
+        q.stop()
+    finally:
+        spark.conf.unset(no_data)
 
     got = {r["url"]: r for r in spark.read.parquet(out).collect()}
     expected = parse_text(text, ParserConfig.default("1.0"), id_seed="u1")
