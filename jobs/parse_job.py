@@ -21,7 +21,8 @@ and idempotently through ops.checkpoint.run_partitioned, and writes:
     <output>/manifest_tiles/
 
 Re-running after a crash skips partitions whose manifest row is
-'done' — resume is the default behavior, no flag needed.
+'done' — resume is the default behavior, no flag needed. The driver
+writes the manifest rows itself, so `--output` is a local path.
 """
 
 from __future__ import annotations
