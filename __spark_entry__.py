@@ -401,19 +401,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering is deliberate: the r4/r5 drivers recorded exactly 50 of
-    # the 51 registered queries and silently dropped the LAST one.
-    # Round 6 retired `spark_native_blocks` (VERDICT r5 ask #1: its
-    # window-FSM equivalence is oracle-covered by `block_segmentation`
-    # and its slot was the one being truncated anyway; the function is
-    # gone, spark/tokenize.py stays for its tests) and promoted the
-    # oracle-backed `dedup_canonical_url` into the catalog (42 oracle
-    # queries), keeping the registered total at 51. The no-oracle teeth
-    # queries stay most-important-first; `multimodal_decode` sits last
-    # as the cheapest row to lose if the driver truncates again — its
-    # codec lanes are exhaustively pinned by the pytest bitstream
-    # fixtures (tests/test_{jpeg,png,gif,bmp,webp,tiff,ico,wav,avi}.py),
-    # so a truncated record row loses the least information.
+    # 51 queries: the 42 oracle-backed catalog queries first, then the
+    # nine no-oracle queries whose teeth are their own assertions, most
+    # important first. A record capped at 50 queries (as in rounds 4-5)
+    # drops only the last, `multimodal_decode`; its codec lanes are
+    # pinned bitstream by bitstream in tests/test_{jpeg,png,gif,bmp,
+    # webp,tiff,ico,wav,avi}.py, so that row loses the least.
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         name: qd.spark_fn for name, qd in build_catalog().items()
     }

@@ -9,11 +9,11 @@ spatial-join layer (cell index, point-in-polygon, kNN, raster<->vector)
 and large-scale text-pipeline operators mandated by the north rule.
 
 Layout:
-    core/   pure Python+numpy kernels (run inside Arrow UDFs)
-    spark/  DataFrame pipeline: extract -> tokenize -> blocks -> features
-    index/  S2 + hex-style hierarchical cell index, compact covers
-    ops/    PIP join, kNN, raster assignment, checkpoint manifests
-    text/   dedup / similarity / quality operators for web text
+    core/     pure Python+numpy kernels (run inside Arrow UDFs)
+    spark/    DataFrame pipeline: extract -> parse kernel -> features
+    index/    quadkey, H3 and S2 cell indexes, compact covers
+    ops/      covers, PIP join, kNN, raster assignment, checkpoint manifests
+    queries/  catalog queries with DuckDB oracles (relational, text ops)
 """
 
 __version__ = "0.1.0"

@@ -3,10 +3,9 @@
 Faithful re-expression of the reference tokenizer grammar:
 dispatch order, canHandle regexes, inline-comment stripping, per-token
 metadata parsing and error strings (reference src/tokenizer.ts:76-171
-and src/tokens/*.ts). Pure Python — designed to run per-line inside
-Arrow-batched UDFs; the Spark layer mirrors the *classification* step
-as a JVM-side `when`-cascade (openair_spark.spark.tokenize) and this
-module provides the authoritative metadata parse.
+and src/tokens/*.ts). Pure Python — it runs per line inside the
+Arrow-batched parse kernel (spark/pipeline.py) and is the only
+tokenizer the engine has.
 
 Error-wrapping fidelity: errors raised while parsing a matched line are
 wrapped a second time by the tokenizer loop, producing the doubled

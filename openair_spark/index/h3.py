@@ -185,12 +185,6 @@ def _rotate_ijk_60cw(i, j, k):
     return _normalize_ijk(i + j, j + k, i + k)
 
 
-def _up_ap7(i, j, k):
-    di, dj = i - k, j - k
-    return _normalize_ijk(int(round((3 * di - dj) / 7.0)),
-                          int(round((di + 2 * dj) / 7.0)), 0)
-
-
 def _up_ap7r(i, j, k):
     di, dj = i - k, j - k
     return _normalize_ijk(int(round((2 * di + dj) / 7.0)),
@@ -911,10 +905,6 @@ def cell_to_string(h: int) -> str:
     return format(int(h) & 0xFFFFFFFFFFFFFFFF, "x")
 
 
-def string_to_cell(s: str) -> int:
-    return int(s, 16)
-
-
 def base_cell_centers() -> list:
     """(lat, lon) degrees of the 122 base cells, index = base cell number."""
     return [(math.degrees(la), math.degrees(lo))
@@ -929,17 +919,6 @@ def base_cell_centers() -> list:
 # is the same published algorithm expressed over numpy arrays, plus the
 # substrate-grid boundary (faceijk.c _faceIjkToCellBoundary, re-derived)
 # that makes vertices exact across icosahedron edges.
-
-
-def _down_ap3_arrays(i, j, k):
-    # res r unit vectors in the aperture-3 res r+1 grid:
-    # iVec (2,0,1)  jVec (1,2,0)  kVec (0,1,2)
-    return _normalize_ijk_arrays(2 * i + j, 2 * j + k, i + 2 * k)
-
-
-def _down_ap3r_arrays(i, j, k):
-    # iVec (2,1,0)  jVec (0,2,1)  kVec (1,0,2)
-    return _normalize_ijk_arrays(2 * i + k, i + 2 * j, j + 2 * k)
 
 
 def _derive_vert_offsets():

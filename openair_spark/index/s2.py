@@ -200,26 +200,6 @@ def decode(cell) -> tuple:
     return face, i, j, level
 
 
-def _st_ij_bounds(i: int, level: int) -> tuple:
-    n = 1 << level
-    return i / n, (i + 1) / n
-
-
-def cell_corners_latlon(cell) -> list:
-    """[(lon, lat)] of the 4 cell corners (geodesic edges are straight in
-    uv space; lon/lat quads are an approximation used by the cover)."""
-    face, i, j, level = decode(cell)
-    s0, s1 = _st_ij_bounds(i, level)
-    t0, t1 = _st_ij_bounds(j, level)
-    out = []
-    for s, t in ((s0, t0), (s1, t0), (s1, t1), (s0, t1)):
-        x, y, z = face_uv_to_xyz(face, st_to_uv(s), st_to_uv(t))
-        lon = float(np.degrees(np.arctan2(y, x)))
-        lat = float(np.degrees(np.arctan2(z, np.hypot(x, y))))
-        out.append((lon, lat))
-    return out
-
-
 def cell_center_latlon(cell) -> tuple:
     face, i, j, level = decode(cell)
     s = (i + 0.5) / (1 << level)

@@ -667,8 +667,8 @@ FROM (
 
 
 def q_windowed_agg(spark, sf_dir):
-    """Batch twin of streaming.windowed_event_stats (hourly tumbling
-    window) — the streaming path itself is tested in tests/test_streaming."""
+    """Hourly tumbling-window event stats (count and value sum per
+    event type), as one batch groupBy."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.date_format(F.date_trunc("hour", "ts"),

@@ -24,11 +24,7 @@ from pyspark.sql import functions as F
 
 from . import QueryDef, load
 
-# hex -> int, portable: Spark conv() vs DuckDB 0x-cast
-def _spark_hex60(col):
-    return F.conv(F.substring(col, 1, 15), 16, 10).cast("long")
-
-
+# hex -> int in DuckDB SQL (the oracles' side of Spark's conv())
 def _sql_hex60(expr: str) -> str:
     return f"CAST(concat('0x', substr({expr}, 1, 15)) AS BIGINT)"
 
@@ -920,8 +916,8 @@ FROM documents
 
 def q_binary_asset_stats(spark, sf_dir):
     """Binary-column handling with an oracle: documents text re-encoded
-    as bytes (the opaque-payload pattern of ops/multimodal.py), sized
-    and fingerprinted JVM-side."""
+    as bytes (an opaque binary payload), sized and fingerprinted
+    JVM-side."""
     docs = load(spark, sf_dir, "documents")
     return (
         docs.select(
@@ -1287,67 +1283,6 @@ CATALOG = {
     "dedup_canonical_url": QueryDef(q_dedup_canonical_url,
                                     SQL_DEDUP_CANONICAL_URL),
 }
-
-
-# ------------------------------------------------ paragraph-level dedup
-# (library operator — not a driver-contract query: the driver record is
-# capped at ~50 rows and every slot is in use; semantics are pinned by
-# tests/test_textops.py instead)
-
-def paragraph_dedup(docs: "DataFrame", delimiter: str = r"\.\s+",
-                    max_df: int = 2, min_words: int = 2) -> "DataFrame":
-    """Corpus-level paragraph dedup (the CCNet-style boilerplate scrub
-    a web-text pipeline runs BEFORE doc-level dedup): split each doc
-    into paragraphs, hash the normalized text, and drop every
-    occurrence beyond the first of any paragraph whose corpus document
-    frequency exceeds `max_df` — cookie banners and nav chrome repeat
-    across thousands of pages, and per-doc near-dup misses them because
-    the surrounding content differs.
-
-    Plan shape (scales to 10^12 docs): one explode (row-local split +
-    posexplode, no shuffle), one hash groupBy for (df, first keeper) —
-    the only shuffle is on paragraph hash, salted naturally by md5
-    uniformity — then a broadcast-size join of the HOT hashes only
-    (paragraphs with df > max_df are a tiny fraction of distinct
-    paragraphs) and a per-doc re-aggregation. Short paragraphs
-    (< min_words words) are never treated as boilerplate.
-
-    Returns (doc_id, n_paragraphs, n_kept, text_clean).
-    """
-    paras = (
-        docs
-        .select("doc_id", F.posexplode(F.split("text", delimiter))
-                .alias("pos", "para"))
-        .where(F.trim("para") != "")
-        .withColumn("phash", F.md5(F.lower(F.trim("para"))))
-        .withColumn("n_words", F.size(F.split(F.trim("para"), r"\s+")))
-    )
-    # only hashes that can possibly be dropped travel into the join:
-    # df > max_df AND long enough to count as boilerplate
-    hot = (
-        paras.where(F.col("n_words") >= min_words)
-        .groupBy("phash")
-        .agg(F.count("*").alias("df"),
-             F.min(F.struct("doc_id", "pos")).alias("keeper"))
-        .where(F.col("df") > max_df)
-        .select("phash", "keeper.doc_id", "keeper.pos")
-        .withColumnRenamed("doc_id", "k_doc")
-        .withColumnRenamed("pos", "k_pos")
-    )
-    kept = (
-        paras.join(F.broadcast(hot), "phash", "left")
-        .withColumn("keep", F.col("k_doc").isNull()
-                    | ((F.col("doc_id") == F.col("k_doc"))
-                       & (F.col("pos") == F.col("k_pos"))))
-    )
-    return (
-        kept.groupBy("doc_id")
-        .agg(F.count("*").alias("n_paragraphs"),
-             F.sum(F.col("keep").cast("long")).alias("n_kept"),
-             F.concat_ws(". ", F.array_sort(F.collect_list(
-                 F.when(F.col("keep"), F.struct("pos", "para")))).para)
-             .alias("text_clean"))
-    )
 
 
 def canonicalize_urls(pages: "DataFrame", url_col: str = "url") -> "DataFrame":

@@ -2,7 +2,7 @@
 
 pages (url, warc_ts, html, text, lang)
   -> extract_openair      (JVM regexp, zero-shuffle)
-  -> tokens / blocks      (posexplode + when-cascade + window)
-  -> parse_features       (Arrow-batched kernel, zero-shuffle map)
+  -> parse_features       (Arrow-batched kernel: tokenize, validate,
+                           build geometry; zero-shuffle map)
   -> spatial layer        (openair_spark.index / openair_spark.ops)
 """

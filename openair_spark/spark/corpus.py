@@ -335,11 +335,3 @@ def pages_df_dist(spark, n_pages: int, seed: str = "openair-corpus",
         spark.range(0, n_pages, numPartitions=partitions)
         .mapInPandas(kernel, PAGES_SCHEMA)
     )
-
-
-def write_pages_parquet(spark, path: str, n_pages: int, seed: str = "openair-corpus",
-                        partitions: int | None = None, **kwargs) -> None:
-    df = pages_df(spark, n_pages, seed, **kwargs)
-    if partitions:
-        df = df.repartition(partitions)
-    df.write.mode("overwrite").parquet(path)

@@ -9,7 +9,7 @@ whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .corpus import BEGIN_SENTINEL, END_SENTINEL
@@ -17,11 +17,6 @@ from .corpus import BEGIN_SENTINEL, END_SENTINEL
 # sentinel lines are matched exactly; (?s) lets the payload span lines.
 # Non-greedy so multiple embedded sections per page each match.
 _EXTRACT_RE = f"(?s){BEGIN_SENTINEL}\\n(.*?)\\n{END_SENTINEL}"
-
-
-def openair_payload() -> Column:
-    """First embedded OpenAIR section of the `text` column ('' if none)."""
-    return F.regexp_extract(F.col("text"), _EXTRACT_RE, 1)
 
 
 def extract_openair(pages: DataFrame) -> DataFrame:

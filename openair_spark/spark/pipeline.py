@@ -11,10 +11,9 @@ Physical design (for the 10^12-page target):
     one row.
   - Per-url documents are bounded (web pages), so batch skew is capped;
     `repartition` on input only when the upstream layout is pathological.
-
-The per-block window/groupBy formulation (openair_spark.spark.tokenize)
-exists for Spark-native validation analytics; the production parse does
-not need its shuffle.
+  - Tokenizing and block validation (token order, required tokens)
+    run inside that kernel (core/tokenizer.py, core/factory.py), so
+    they add no shuffle either.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Spark-side OpenAIR sink (reference O3/S4: src/geojson-to-openair.ts
+"""Spark-side OpenAIR text lines (reference O3/S4: src/geojson-to-openair.ts
 via src/parser.ts:213-219).
 
 Arrow-batched mapInPandas over feature_json rows; the year is pinned
@@ -43,8 +43,3 @@ def openair_lines(features: DataFrame, version: str = VERSION_2,
             yield pd.DataFrame(out, columns=["url", "airspace_idx", "n_lines", "openair_text"])
 
     return src.mapInPandas(kernel, LINES_SCHEMA)
-
-
-def write_openair_text(lines_df: DataFrame, path: str) -> None:
-    """Sink: one text part per partition (df.write.text)."""
-    lines_df.select("openair_text").write.mode("overwrite").text(path)

@@ -1,5 +1,5 @@
 """Spark pipeline tests: extraction byte-identity, pipeline parity with
-the core parser, Spark-native validation operators, feature collections."""
+the core parser, error-row geometry, feature collections."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from openair_spark.core.parser import parse_text
 from openair_spark.spark.corpus import PAYLOADS, pages_df
 from openair_spark.spark.extract import extract_openair
 from openair_spark.spark.pipeline import feature_collections, parse_errors, parse_features
-from openair_spark.spark.tokenize import blocks_df, inventory_violations, order_violations, tokens_df
 
 N_PAGES = 60
 SEED = "test-corpus"
@@ -112,26 +111,6 @@ def test_payloads_parse_under_v1():
         assert len(result.geojson["features"]) >= 1, name
         ring = result.geojson["features"][0]["geometry"]["coordinates"][0]
         assert len(ring) >= 4 and ring[0] == ring[-1], name
-
-
-def test_spark_native_validation_operators(spark):
-    """order_violations / inventory_violations flag exactly the blocks
-    the core validator rejects."""
-    bad_text = "AC D\nAH 2000ft AMSL\nAN Missing-above\nAL GND\nDP 54:25:00 N 010:40:00 E"
-    good_text = "AC D\nAY TMA\nAN ok\nAH 2000ft AMSL\nAL GND\nDP 54:25:00 N 010:40:00 E"
-    df = spark.createDataFrame(
-        [("u-bad", bad_text), ("u-good", good_text)], "url string, openair_text string"
-    )
-    blocks = blocks_df(tokens_df(df))
-    order = order_violations(blocks, "2.0").collect()
-    assert {r["url"] for r in order} == {"u-bad"}
-    assert order[0]["token_type"] == "AC" and order[0]["next_type"] == "AH"
-
-    inv_text = "AC D\nAN no-ceilings\nDP 54:25:00 N 010:40:00 E"
-    df2 = spark.createDataFrame([("u-inv", inv_text)], "url string, openair_text string")
-    inv = inventory_violations(blocks_df(tokens_df(df2)), "2.0").collect()
-    assert len(inv) == 1
-    assert sorted(inv[0]["missing_tokens"]) == ["AH", "AL", "AY"]
 
 
 def test_error_payload_surfaces_geometry(spark):

@@ -166,38 +166,6 @@ def test_materialized_intermediates_release_after_gc(spark):
                      f"still cached after GC drain")
 
 
-def test_paragraph_dedup_removes_corpus_boilerplate(spark):
-    """The CCNet-style scrub: a paragraph repeated across many docs
-    (cookie banner) keeps only its first (doc, pos) occurrence; unique
-    paragraphs and sub-threshold repeats survive everywhere; cleaned
-    text preserves in-doc paragraph order."""
-    from openair_spark.queries.textops import paragraph_dedup
-
-    banner = "we use cookies to improve your experience"
-    rows = []
-    for i in range(6):
-        rows.append((i, f"{banner}. unique content number {i} here. "
-                        f"closing line {i}", "en"))
-    # doc 6: banner mid-document; doc 7: no banner
-    rows.append((6, f"intro six. {banner}. outro six", "en"))
-    rows.append((7, "totally unrelated. nothing shared", "en"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-
-    out = {r["doc_id"]: r for r in paragraph_dedup(docs, max_df=2).collect()}
-    assert len(out) == 8
-    # doc 0 is the keeper (min (doc, pos)) — banner survives there
-    assert banner in out[0]["text_clean"]
-    for i in range(1, 7):
-        assert banner not in out[i]["text_clean"], i
-    # everything else survives, order preserved
-    assert out[6]["text_clean"] == "intro six. outro six"
-    assert out[7]["text_clean"] == "totally unrelated. nothing shared"
-    for i in range(1, 6):
-        assert out[i]["text_clean"] == (f"unique content number {i} here. "
-                                        f"closing line {i}")
-        assert out[i]["n_paragraphs"] == 3 and out[i]["n_kept"] == 2
-
-
 def test_url_canonicalization_and_dedup(spark):
     """Scheme/host case, fragments, default ports, tracking params, and
     trailing slashes all collapse; distinct resources stay distinct."""
