@@ -284,7 +284,7 @@ def cover_arrays(rings: list, min_res: int = 5, max_res: int = 9,
     # casts (RingSet: x1/y1 are the segment start points = ring
     # vertices sans the duplicated closing vertex)
     from .pip import RingSet
-    rs = RingSet({i: r for i, r in enumerate(rings)})
+    rs = RingSet(rings)
 
     out = CoverCells(nr)
     done = np.zeros(nr, dtype=bool)

@@ -56,6 +56,12 @@ def ring_edges(rings: list) -> tuple[np.ndarray, ...]:
 RING_TYPE = pa.list_(pa.list_(pa.float64()))
 
 
+def ring_array(rings) -> pa.Array:
+    """A sequence of rings (lists or (M, 2) arrays, or None) as one
+    Arrow list<list<double>> array."""
+    return pa.array([None if r is None else list(r) for r in rings], RING_TYPE)
+
+
 def usable_rings(rings) -> tuple[np.ndarray, list[np.ndarray]]:
     """Positions and (M, 2) float arrays of the rings a cover is built
     for. `rings` is an Arrow list<list<double>> column (decoded without
@@ -66,7 +72,7 @@ def usable_rings(rings) -> tuple[np.ndarray, list[np.ndarray]]:
     if isinstance(rings, pa.ChunkedArray):
         rings = rings.combine_chunks()
     elif not isinstance(rings, pa.Array):
-        rings = pa.array([None if r is None else list(r) for r in rings], RING_TYPE)
+        rings = ring_array(rings)
     lens = pc.list_value_length(rings).fill_null(0).to_numpy(zero_copy_only=False)
     pair = pc.equal(pc.list_value_length(rings.flatten()), 2).fill_null(False)
     unpaired = np.bincount(np.repeat(np.arange(len(lens)), lens), minlength=len(lens),
@@ -88,25 +94,11 @@ class RingSet:
     candidates with repeat/reduceat keeps the work purely vectorized.
     """
 
-    def __init__(self, rings: dict):
-        self._csr(list(rings), *ring_edges(
-            [np.asarray(r, dtype=np.float64) for r in rings.values()]))
-
-    @classmethod
-    def from_edges(cls, ids, lens, x1, y1, x2, y2) -> "RingSet":
-        """RingSet from flat edge arrays sorted ring after ring, in edge
-        order: ring ids[i] owns the next lens[i] edges."""
-        rs = cls.__new__(cls)
-        rs._csr(ids, lens, x1, y1, x2, y2)
-        return rs
-
-    def _csr(self, ids, lens, x1, y1, x2, y2) -> None:
-        self.ids = list(ids)
-        self.idx_of = {pid: i for i, pid in enumerate(self.ids)}
-        self.lens = np.asarray(lens, dtype=np.int64)
+    def __init__(self, rings: list):
+        """rings: closed (M, 2) rings, addressed by position (ring_idx)."""
+        self.lens, self.x1, self.y1, self.x2, self.y2 = ring_edges(
+            [np.asarray(r, dtype=np.float64) for r in rings])
         self.starts = np.cumsum(self.lens) - self.lens
-        self.x1, self.y1, self.x2, self.y2 = (
-            np.asarray(a, dtype=np.float64) for a in (x1, y1, x2, y2))
 
     def bboxes(self) -> np.ndarray:
         """(4, R) inclusive bbox per ring: west, south, east, north."""

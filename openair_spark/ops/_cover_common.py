@@ -48,7 +48,7 @@ class RingBatch:
 
     def __init__(self, rings: list):
         self.rings = rings
-        self.rs = RingSet({i: r for i, r in enumerate(rings)})
+        self.rs = RingSet(rings)
         rs = self.rs
         self.sxmin = np.minimum(rs.x1, rs.x2)
         self.sxmax = np.maximum(rs.x1, rs.x2)

@@ -2,12 +2,15 @@
 
 Plan shape (for 10^12 points x ~10^5 polygons):
 
-  polygons --one setup--> cover rows (polygon_idx, cell, is_full) + ring edges
-      (a DataFrame's setup runs on executors in one pass; a driver-side
-      list runs the same setup in the driver)
-  driver   ProbeIndex: sorted int64 cell keys with CSR postings of
-           (polygon_idx, is_full), per-polygon bbox, the RingSet and
-           the ids as an Arrow string array   [one broadcast variable]
+  polygons --one Arrow setup--> one row per usable ring, in input order:
+           (polygon_id, ring, cells, full), the ring's cover as two
+           aligned lists (polygon_setup: one mapInArrow on the executors
+           for a DataFrame, collected with toArrow; the same function
+           on the driver for a list)
+  driver   ProbeIndex: a row's position is its polygon_idx; sorted int64
+           cell keys with CSR postings of (polygon_idx, is_full), per-
+           polygon bbox, the RingSet from the ring column and the ids
+           column as an Arrow string array    [one broadcast variable]
   points   --one mapInArrow--> each point's cells at the resolutions
            the index uses (quadkey.cell_id, bit-equal to the SQL
            expression), searchsorted probe, inclusive bbox test, FULL
@@ -29,15 +32,15 @@ exact work spreads over its boundary cells.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..index import quadkey
 from ..index.cover import _PAIR_BUDGET, cover_arrays
-from ..index.pip import RingSet, crossing_parity, csr_expand, ring_edges, usable_rings
+from ..index.pip import RingSet, crossing_parity, csr_expand, ring_array, usable_rings
 
 # Cover band for the PIP probe index. min 7 (not the tile mandate's 5):
 # every cover resolution the index USES adds one probe per point, so a
@@ -51,86 +54,64 @@ from ..index.pip import RingSet, crossing_parity, csr_expand, ring_edges, usable
 MIN_RES = 7
 MAX_RES = 9
 
-_SETUP_SCHEMA = ("polygon_id string, kind int, a long, b int, "
-                 "x1 double, y1 double, x2 double, y2 double")
 
-
-def _setup_rows(polygons: pd.DataFrame, min_res: int, max_res: int) -> pd.DataFrame:
-    """polygons(polygon_id, ring) -> both broadcast-route inputs as one
-    frame: cover rows (kind=0: a=cell, b=is_full) and ring edge rows
-    (kind=1: a=edge_idx, x1,y1,x2,y2=edge)."""
-    pos, arrs = usable_rings(polygons["ring"])
+def polygon_setup(rb: pa.RecordBatch, min_res: int, max_res: int) -> pa.RecordBatch:
+    """A (polygon_id, ring) batch -> one row per usable ring, in input
+    order: its id, its ring, and its cover cells with their is_full
+    flags as two aligned lists. Rows that share an id stay separate
+    rings, so each one's hits count on their own."""
+    pos, arrs = usable_rings(rb.column("ring"))
     owner, cell, is_full = cover_arrays(arrs, min_res=min_res, max_res=max_res)
-    lens, ex1, ey1, ex2, ey2 = ring_edges(arrs)
-    eowner = np.repeat(np.arange(len(arrs)), lens)
-    edge_idx = np.arange(len(eowner)) - np.repeat(np.cumsum(lens) - lens, lens)
-    ids = polygons["polygon_id"].to_numpy()[pos]
-    n_cov, n_edge = len(cell), len(eowner)
-    pad = np.zeros(n_cov)
-    return pd.DataFrame({
-        "polygon_id": np.concatenate([ids[owner], ids[eowner]]),
-        "kind": np.repeat(np.array([0, 1], dtype=np.int32), [n_cov, n_edge]),
-        "a": np.concatenate([cell, edge_idx]),
-        "b": np.concatenate([is_full, np.zeros(n_edge, dtype=bool)]).astype(np.int32),
-        "x1": np.concatenate([pad, ex1]), "y1": np.concatenate([pad, ey1]),
-        "x2": np.concatenate([pad, ex2]), "y2": np.concatenate([pad, ey2]),
-    })
+    offsets = pa.array(np.searchsorted(owner, np.arange(len(arrs) + 1)), pa.int32())
+    take = pa.array(pos, pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [rb.column("polygon_id").take(take), rb.column("ring").take(take),
+         pa.ListArray.from_arrays(offsets, pa.array(cell, pa.int64())),
+         pa.ListArray.from_arrays(offsets, pa.array(is_full, pa.bool_()))],
+        names=["polygon_id", "ring", "cells", "full"])
 
 
-def _polygon_setup(polygons: DataFrame, min_res: int, max_res: int) -> DataFrame:
-    """_setup_rows as one executor pass over a polygon DataFrame: the
-    ring set never crosses the driver as nested lists, and one scan
-    yields both the edges and the cover rows."""
-    return polygons.select("polygon_id", "ring").mapInPandas(
-        lambda batches: (_setup_rows(pdf, min_res, max_res) for pdf in batches),
-        _SETUP_SCHEMA)
-
-
-def _split_setup(pdf: pd.DataFrame) -> tuple[RingSet, pd.DataFrame]:
-    """Driver-side split of the setup rows into the RingSet (one ring
-    per polygon_id, edges in order) and the cover frame keyed by the
-    RingSet's int polygon_idx."""
-    edges = pdf[pdf["kind"] == 1].sort_values(["polygon_id", "a"], kind="stable")
-    pid = edges["polygon_id"].to_numpy()
-    starts = np.flatnonzero(np.r_[len(pid) > 0, pid[1:] != pid[:-1]])
-    rs = RingSet.from_edges(pid[starts], np.diff(np.r_[starts, len(pid)]),
-                            *(edges[c].to_numpy() for c in ("x1", "y1", "x2", "y2")))
-    cov = pdf[pdf["kind"] == 0]
-    index_pdf = pd.DataFrame({
-        "cell": cov["a"].to_numpy(dtype=np.int64),
-        "polygon_idx": cov["polygon_id"].map(rs.idx_of).to_numpy(dtype=np.int32),
-        "is_full": cov["b"].to_numpy(dtype=bool),
-    })
-    return rs, index_pdf
-
-
-def list_setup(polygons: list[dict], min_res: int, max_res: int
-               ) -> tuple[RingSet, pd.DataFrame]:
-    """The broadcast setup of a driver-side [{'polygon_id', 'ring'}] list."""
-    return _split_setup(_setup_rows(
-        pd.DataFrame(polygons, columns=["polygon_id", "ring"]), min_res, max_res))
+def setup_table(polygons, min_res: int, max_res: int) -> pa.Table:
+    """polygon_setup over a polygon DataFrame (one mapInArrow on the
+    executors, collected as Arrow) or a driver-side [{'polygon_id',
+    'ring'}] list (run here)."""
+    if isinstance(polygons, DataFrame):
+        return polygons.select("polygon_id", "ring").mapInArrow(
+            lambda batches: (polygon_setup(rb, min_res, max_res) for rb in batches),
+            "polygon_id string, ring array<array<double>>, cells array<bigint>, "
+            "full array<boolean>").toArrow()
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([p["polygon_id"] for p in polygons], pa.string()),
+         ring_array([p["ring"] for p in polygons])], names=["polygon_id", "ring"])
+    return pa.Table.from_batches([polygon_setup(batch, min_res, max_res)])
 
 
 class ProbeIndex:
     """The whole broadcast side of pip_join and assign_tiles, shipped
     once as one broadcast variable (unpickled once per Python worker).
 
+    Built from a setup_table: a row's position is its polygon_idx.
     Cover cells are sorted int64 keys with CSR postings of (polygon_idx,
     is_full), probed by searchsorted: a sorted-array probe holds the
     index in flat arrays at a log-time lookup, the memory side of the
     sorted-vs-hash trade-off. The hot path carries the int polygon_idx;
     the id string is only materialized for hits, by Arrow take."""
 
-    def __init__(self, rs: RingSet, index_pdf: pd.DataFrame):
-        cell = index_pdf["cell"].to_numpy(dtype=np.int64)
+    def __init__(self, setup: pa.Table):
+        cells = setup.column("cells").combine_chunks()
+        lens = pc.list_value_length(cells).to_numpy(zero_copy_only=False)
+        cell = cells.flatten().to_numpy()
         order = np.argsort(cell, kind="stable")
         self.keys, first = np.unique(cell[order], return_index=True)
         self.offsets = np.r_[first, len(cell)].astype(np.int64)
-        self.poly = index_pdf["polygon_idx"].to_numpy(dtype=np.int64)[order]
-        self.full = index_pdf["is_full"].to_numpy(dtype=bool)[order]
+        self.poly = np.repeat(np.arange(len(lens), dtype=np.int64), lens)[order]
+        full = setup.column("full").combine_chunks().flatten()
+        self.full = full.to_numpy(zero_copy_only=False)[order]
         self.resolutions = sorted({int(r) for r in self.keys >> quadkey._RES_SHIFT})
-        self.rs, self.bbox = rs, rs.bboxes()
-        self.ids = pa.array(rs.ids, pa.string())
+        _, arrs = usable_rings(setup.column("ring"))
+        self.rs = RingSet(arrs)
+        self.bbox = self.rs.bboxes()
+        self.ids = setup.column("polygon_id").combine_chunks()
 
     def hits(self, keys, rows, px, py, box: bool = True):
         """(rows, polygon_idx) of every hit: rows[i]'s probe key keys[i]
@@ -190,7 +171,6 @@ DEFAULT_MAX_BROADCAST_EDGES = 4_000_000
 
 
 def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "lon",
-             min_res: int = MIN_RES, max_res: int = MAX_RES,
              max_broadcast_edges: int = DEFAULT_MAX_BROADCAST_EDGES) -> DataFrame:
     """PIP join: returns points columns + polygon_id for every
     (point, polygon) containment pair.
@@ -224,10 +204,10 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
                                     lat_col=lat_col, lon_col=lon_col, res=7)
             polys_persisted.unpersist()
             return hits.drop("cell")
-        setup = _split_setup(_polygon_setup(polys_persisted, min_res, max_res).toPandas())
+        setup = setup_table(polys_persisted, MIN_RES, MAX_RES)
         polys_persisted.unpersist()
     else:
-        setup = list_setup(polygons, min_res, max_res)
+        setup = setup_table(polygons, MIN_RES, MAX_RES)
     LAST_ROUTE = "broadcast"
 
     def point_probe(rb, resolutions):
@@ -237,7 +217,7 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
         keys = [quadkey.cell_id(lat[ok], lon[ok], r) for r in resolutions]
         return np.concatenate([ok[:0], *keys]), np.tile(ok, len(resolutions)), lon, lat
 
-    return probe_join(points, ProbeIndex(*setup), point_probe)
+    return probe_join(points, ProbeIndex(setup), point_probe)
 
 
 # Slack on a slice's cell bounds, in degrees: a point's floor-computed
@@ -305,7 +285,7 @@ def polygon_cells_at_res(polygons: DataFrame, res: int = 7) -> DataFrame:
         for rb in batches:
             pos, arrs = usable_rings(rb.column("ring"))
             owner, cell, is_full = cover_arrays(arrs, min_res=res, max_res=res)
-            rs = RingSet.from_edges(range(len(arrs)), *ring_edges(arrs))
+            rs = RingSet(arrs)
             part = np.flatnonzero(~is_full)
             counts, eidx = edge_slices(rs, owner[part], cell[part])
             lens = np.zeros(len(cell), dtype=np.int64)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index import quadkey
-from .pip import ProbeIndex, list_setup, probe_join
+from .pip import ProbeIndex, probe_join, setup_table
 
 
 def tiles_from_points(points: DataFrame, res: int,
@@ -53,7 +53,7 @@ def assign_tiles(tiles: DataFrame, polygons: list[dict], res: int,
         west, south, east, north = quadkey.cell_bounds(keys)
         return keys[rows], rows, (west + east) / 2.0, (south + north) / 2.0
 
-    return probe_join(tiles, ProbeIndex(*list_setup(polygons, res, res)), tile_probe,
+    return probe_join(tiles, ProbeIndex(setup_table(polygons, res, res)), tile_probe,
                       box=False)
 
 

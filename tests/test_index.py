@@ -162,7 +162,7 @@ def test_ringset_bulk_pip_matches_per_ring():
         r = rng.uniform(0.3, 5.0, n)
         pts = np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], axis=1)
         rings[f"p{k}"] = np.vstack([pts, pts[:1]])
-    rs = RingSet(rings)
+    rs = RingSet(list(rings.values()))
     px = rng.uniform(-70, 70, 4000)
     py = rng.uniform(-70, 70, 4000)
     ridx = rng.integers(0, 40, 4000)

@@ -293,28 +293,31 @@ def test_mega_polygon_skew_split_and_pip(spark):
 
 
 def test_polygon_setup_ring_set_matches_nested_constructor(spark):
-    """The DataFrame route's setup (one executor pass, RingSet from the
-    sorted edge rows) builds the same CSR edge arrays per polygon as the
-    nested-list constructor, and tolerates an empty polygon set."""
+    """The DataFrame route's setup (one executor pass, one row per
+    polygon, the ProbeIndex's RingSet built from its ring column) builds
+    the same CSR edge arrays per polygon as the nested-list constructor,
+    and tolerates an empty polygon set."""
     from openair_spark.index.pip import RingSet
-    from openair_spark.ops.pip import _polygon_setup, _split_setup
+    from openair_spark.ops.pip import ProbeIndex, setup_table
 
     polys = [(pid, [[float(i), float(i)] for i in range(n)] + [[0.0, 0.0]])
              for pid, n in (("a", 4), ("b", 6), ("c", 3))]
     df = spark.createDataFrame(polys, "polygon_id string, ring array<array<double>>")
-    flat, _ = _split_setup(_polygon_setup(df, 7, 9).toPandas())
-    ref = RingSet({pid: np.asarray(ring) for pid, ring in polys})
-    for pid in ("a", "b", "c"):
-        i, j = flat.idx_of[pid], ref.idx_of[pid]
-        assert flat.lens[i] == ref.lens[j]
+    setup = setup_table(df, 7, 9)
+    assert setup.column("polygon_id").to_pylist() == ["a", "b", "c"]
+    flat = ProbeIndex(setup).rs
+    ref = RingSet([np.asarray(ring) for _, ring in polys])
+    for i in range(len(polys)):
+        assert flat.lens[i] == ref.lens[i]
         sl_f = slice(flat.starts[i], flat.starts[i] + flat.lens[i])
-        sl_r = slice(ref.starts[j], ref.starts[j] + ref.lens[j])
+        sl_r = slice(ref.starts[i], ref.starts[i] + ref.lens[i])
         for attr in ("x1", "y1", "x2", "y2"):
             assert (getattr(flat, attr)[sl_f] == getattr(ref, attr)[sl_r]).all()
 
     empty = spark.createDataFrame([], "polygon_id string, ring array<array<double>>")
-    rs, index_pdf = _split_setup(_polygon_setup(empty, 7, 9).toPandas())
-    assert rs.ids == [] and len(rs.x1) == 0 and len(index_pdf) == 0
+    ix = ProbeIndex(setup_table(empty, 7, 9))
+    assert len(ix.rs.lens) == 0 and len(ix.rs.x1) == 0 and len(ix.keys) == 0
+    assert len(ix.ids) == 0
 
 
 def test_pip_join_empty_polygon_frame(points, spark):

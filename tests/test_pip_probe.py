@@ -1,9 +1,12 @@
 """Tests for the PIP probe kernel: the Python cell keys equal the Spark
 SQL expression bit for bit, per-cell edge slices give the whole ring's
-parity, null and NaN points get no hits on any route, and the salted
-shuffle route matches the broadcast route on a mega-polygon."""
+parity, null and NaN points get no hits on any route, the salted
+shuffle route matches the broadcast route on a mega-polygon, and rings
+that share a polygon_id each count on their own on every route."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -11,9 +14,10 @@ from pyspark.sql import functions as F
 
 from openair_spark.index import quadkey
 from openair_spark.index.cover import cover_arrays
-from openair_spark.index.pip import RingSet, crossing_parity, points_in_ring, ring_edges
+from openair_spark.index.pip import RingSet, crossing_parity, points_in_ring
 from openair_spark.ops import pip as pip_mod
 from openair_spark.ops.pip import edge_slices, pip_join, pip_join_shuffle, polygon_cells_at_res
+from openair_spark.ops.raster import assign_tiles, tiles_from_points
 from test_ops import POLYGONS, _polygons_df, _ring
 
 FIR = [[-10.0, 35.0], [25.0, 36.0], [24.0, 64.0], [-9.0, 63.0], [-10.0, 35.0]]
@@ -126,7 +130,7 @@ def test_edge_slices_match_whole_ring_parity():
     over the whole ring."""
     rng = np.random.default_rng(41)
     for k, ring in enumerate(_slice_rings()):
-        rs = RingSet.from_edges([0], *ring_edges([ring]))
+        rs = RingSet([ring])
         t = np.array([0.0, 0.25, 1 / 3, 0.5, 0.9])[:, None, None]
         on_ring = (ring[:-1] + t * (ring[1:] - ring[:-1])).reshape(-1, 2)
         verdicts = []
@@ -174,3 +178,52 @@ def test_shuffle_salt_matches_broadcast_with_mega_polygon(spark, salt):
     got = pip_join_shuffle(pts, cells, salt=salt, res=7)
     assert got.columns == ["cell", "point_id", "lat", "lon", "polygon_id"]
     assert _pairs(got) == want
+
+
+def _ray_cast(x: float, y: float, ring) -> bool:
+    """Scalar even-odd ray cast, independent of the engine's kernels."""
+    inside = False
+    for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
+        if ((y1 <= y < y2) or (y2 <= y < y1)) and x < x1 + (y - y1) * (x2 - x1) / (y2 - y1):
+            inside = not inside
+    return inside
+
+
+def test_rings_sharing_an_id_count_separately(spark):
+    """Two overlapping rings named 'p' are two input rows: a point inside
+    both gets two hits, a point inside one of them one hit, on the
+    broadcast route (DataFrame and list polygons), the shuffle route and
+    the raster assignment. The expected multiset is a scalar ray cast
+    over each input row."""
+    first, second = _ring(12.0, 52.0, 2.0), _ring(14.0, 54.0, 2.0)
+    polygons = [{"polygon_id": "p", "ring": first}, {"polygon_id": "p", "ring": second}]
+    rng = np.random.default_rng(61)
+    named = [("both", 53.0, 13.0), ("first", 51.0, 11.0), ("second", 55.0, 15.0),
+             ("neither", 60.0, 20.0)]
+    rows = named + [(f"r{i}", float(a), float(b)) for i, (a, b)
+                    in enumerate(zip(rng.uniform(48, 58, 400), rng.uniform(8, 18, 400)))]
+    pts = spark.createDataFrame(rows, "point_id string, lat double, lon double")
+    want = sorted((pid, p["polygon_id"]) for pid, lat, lon in rows for p in polygons
+                  if _ray_cast(lon, lat, p["ring"]))
+    hits = Counter(pid for pid, _ in want)
+    assert [hits[n] for n, _, _ in named] == [2, 1, 1, 0]
+
+    polys_df = _polygons_df(spark, polygons)
+    assert _pairs(pip_join(pts, polys_df)) == want
+    assert pip_mod.LAST_ROUTE == "broadcast"
+    assert _pairs(pip_join(pts, polygons)) == want
+    for salt in (1, 3):
+        got = pip_join_shuffle(pts, polygon_cells_at_res(polys_df, res=7), salt=salt)
+        assert _pairs(got) == want
+
+    res = 8
+    tiles = tiles_from_points(pts.withColumn("value", F.lit(1.0)), res=res)
+    ids = [r["tile"] for r in tiles.select("tile").collect()]
+    west, south, east, north = quadkey.cell_bounds(np.asarray(ids, dtype=np.int64))
+    centres = zip(ids, (west + east) / 2.0, (south + north) / 2.0)
+    want_tiles = sorted((t, p["polygon_id"]) for t, x, y in centres for p in polygons
+                        if _ray_cast(x, y, p["ring"]))
+    assert len(want_tiles) > len(set(want_tiles)) > 0
+    got_tiles = sorted((r["tile"], r["polygon_id"])
+                       for r in assign_tiles(tiles, polygons, res=res).collect())
+    assert got_tiles == want_tiles

@@ -37,19 +37,12 @@ def norm_rows(cols, rows):
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     from openair_spark.queries import build_catalog
+    from openair_spark.spark.session import get_spark
 
     only = set(sys.argv[1:])
     catalog = build_catalog()
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("check-contract")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
